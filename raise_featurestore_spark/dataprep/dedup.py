@@ -47,6 +47,45 @@ def _norm_text_sql(e: str) -> str:
     return f"LOWER(TRIM({e}))"
 
 
+def _bucket_pairs(
+    df: DataFrame, keys: list[str], payload: list[str], keep: str | None = None
+) -> DataFrame:
+    """Every pair of rows that share a bucket, without a self-join.
+
+    Groups ``df`` by ``keys`` and returns one row per (pair, shared
+    bucket): ``a`` and ``b`` are ``struct(*payload)`` with ``a.id <
+    b.id`` (``payload`` must include ``id``; rows with equal ids never
+    pair). A pair sharing k buckets appears k times; singleton buckets
+    emit nothing. ``keep`` is an optional SQL predicate over the two rows
+    ``x`` and ``y`` (in either order); pairs failing it are dropped
+    inside the expansion, before they are emitted.
+
+    Memory: a bucket's pairs stream through two chained Generates
+    (posexplode of the bucket, then explode of each pivot's tail slice),
+    so a bucket of m rows emits its C(m, 2) pairs with O(m) bytes per
+    row. ``collect_list`` holds a whole bucket at aggregation
+    finalization, and nothing bounds a bucket's size: it is every row
+    that shares its key.
+    """
+    keep_pair = "x.id != y.id" if keep is None else f"x.id != y.id AND ({keep})"
+    return (
+        df.groupBy(*keys)
+        .agg(F.collect_list(F.struct(*payload)).alias("xs"))
+        .where(F.size("xs") >= 2)
+        .select("xs", F.posexplode("xs").alias("__i", "x"))
+        .select(
+            "x",
+            F.explode(
+                F.expr(f"filter(slice(xs, __i + 2, size(xs)), y -> {keep_pair})")
+            ).alias("y"),
+        )
+        .select(
+            F.expr("IF(x.id < y.id, x, y)").alias("a"),
+            F.expr("IF(x.id < y.id, y, x)").alias("b"),
+        )
+    )
+
+
 # ---------------------------------------------------------------- exact
 
 
@@ -89,11 +128,9 @@ def shingles(
     """(id, shingle-hash) pairs — distinct character n-grams per doc.
 
     The normalized text is PROJECTED once per row before the gram
-    transform (r11-opt): referencing ``lower(trim(text))`` inside the
-    lambda re-evaluates it per element — one full lowered copy of the
-    document per shingle position, O(len²) bytes per doc (measured
-    0.43–0.46 → 0.29–0.30 s for the sf0.1 shingle pass, identical
-    hashes).
+    transform: referencing ``lower(trim(text))`` inside the lambda would
+    re-evaluate it per element — one full lowered copy of the document
+    per shingle position, O(len²) bytes per doc.
     """
     base = df.select(
         F.col(id_col).alias("id"), _norm_text(F.col(text_col)).alias("__t")
@@ -141,17 +178,10 @@ def jaccard_pairs(
     |docs|²; candidates are then verified with one in-row array_intersect
     per pair.
 
-    Candidate generation is ONE groupBy over the prefix index (r11):
-    collect each shingle's posting list — bounded by the df cap, ≤ max_df
-    ids — and emit its C(df, 2) pairs IN-ROW with an array transform. No
-    self-join, no skew machinery: per-group work is structurally bounded
-    at C(max_df, 2) (~20k pairs at the default 200), so there is nothing
-    to salt and nothing to broadcast. This replaced a prefix-index
-    self-join that needed hot-key salting plus a broadcast hot-set — the
-    x64 scale rehearsal OOM'd the driver on that broadcast's
-    corpus-linear cardinality, and the fixed (capped + sort-merge)
-    variant still paid two sorted shuffles of the index where this shape
-    pays one unsorted one. Same wall at sf0.1, identical pair sets.
+    Candidates come from :func:`_bucket_pairs` over the prefix index,
+    bucketed by shingle: each posting list holds ≤ max_df ids (the df
+    cap), so per-bucket work is bounded at C(max_df, 2) pairs and there
+    is nothing to salt or broadcast.
 
     The shingle frame is consumed three times (df-cap, index join, sizes);
     ``persist_shingles`` caches it for interactive/local use. At 100 TB pass
@@ -166,19 +196,13 @@ def jaccard_pairs(
     # SORT-MERGE, not broadcast, for the df-attach join: df_counts is the
     # corpus's DISTINCT-shingle relation — Catalyst's size estimate reads
     # it as broadcastable at toy scale, but it grows linearly with the
-    # corpus and the x64 scale rehearsal killed the driver building the
-    # broadcast (r11). SMJ clusters on sh (the build side reuses the
-    # groupBy's own exchange) and SPILLS instead of holding a per-task
-    # hash relation: the shuffle_hash variant measured in between GC-
-    # thrashed at x64 — 32 concurrent in-heap builds of a corpus-scale
-    # relation is the same unbounded-memory bet as the broadcast, one
-    # level down. This is the join shape a 100 TB corpus needs anyway.
+    # corpus. SMJ clusters on sh (the build side reuses the groupBy's own
+    # exchange) and spills instead of holding a per-task hash relation,
+    # which a shuffle-hash join would build in heap once per task.
     #
     # The join keeps EVERY shingle row (the cap becomes an in-row
     # condition) so that ONE groupBy(id) computes both the full set size
-    # sz and the rare sorted array — the r11-opt fold of the old separate
-    # sizes = sh.groupBy(id) aggregation, which paid a second pass over
-    # the persisted shingle frame. The rare condition sits INSIDE
+    # sz and the rare sorted array. The rare condition sits INSIDE
     # collect_list as a WHEN (collect_list skips nulls), so the partial
     # aggregate drops common shingles map-side and the exchange ships
     # only rare structs plus the partial counts — not the full corpus of
@@ -193,10 +217,9 @@ def jaccard_pairs(
     # collide within those prefixes — so candidate generation only touches
     # the rarest ~(1-t) fraction of the index, shrinking Σdf² by orders of
     # magnitude on collision-heavy corpora. Verification then runs in-row:
-    # one array_intersect per surviving candidate pair instead of the old
-    # (id_a, id_b, shared-shingle)-row explosion + groupBy, which dominated
-    # runtime. t gets a 1e-3 safety margin because the emitted jaccard is
-    # rounded before the threshold compare.
+    # one array_intersect per surviving candidate pair. t gets a 1e-3
+    # safety margin because the emitted jaccard is rounded before the
+    # threshold compare.
     t_eff = max(threshold - 1e-3, 0.0)
     doc_sets = (
         flagged.groupBy("id")
@@ -230,54 +253,19 @@ def jaccard_pairs(
         # row per doc. At 100 TB this frame IS the signature store —
         # materialize it to a table instead (same note as simhash below).
         doc_sets = doc_sets.persist()
-    # The prefix rows CARRY the doc's (sz, rsz) ints (r12-opt): candidate
-    # pairs inherit both sides' size metadata straight from the in-row
-    # expansion, so the two slim (id, sz, rsz) SMJ attach joins — two
-    # sorted exchanges of the candidate frame plus two of the doc frame —
-    # disappear outright (guide §2.3 ship metadata, §2.4 remove
-    # shuffles). Cost: +8 bytes on each prefix-index row and +16 on each
-    # pre-dedup candidate occurrence, orders below the removed join
-    # machinery at any scale.
+    # prefix rows carry the doc's (sz, rsz), so candidate pairs inherit
+    # both sides' size metadata from the expansion with no attach join
     pref = doc_sets.select(
         "id", "sz", F.size("arr").alias("rsz"), F.posexplode("prefix").alias("pos", "sh")
     )
-
-    # Candidate generation: ONE groupBy over the prefix index. Each
-    # shingle's posting list is ≤ max_df ids (the df cap upstream), so
-    # collect_list is bounded and the in-row expansion emits that key's
-    # C(df, 2) ordered pairs without any join — skew is structurally
-    # bounded at C(max_df, 2) per group, so no salting, no hot-set
-    # broadcast, and HALF the shuffled index volume of the self-join
-    # shape this replaced (whose skew/broadcast machinery the x64 scale
-    # rehearsal broke twice — see the docstring). The expansion is TWO
-    # chained Generates (posexplode of the posting list, then explode of
-    # the per-pivot tail slice) rather than one nested
-    # flatten/transform/slice expression (r12-opt): the pair stream and
-    # per-row memory are identical, but the shallow per-Generate
-    # expressions replace one deep tree in whole-stage codegen — the
-    # nested form was a measurable slice of the query's one-time janino
-    # cost. Pairs carry the PREFIX POSITIONS of the colliding shingle in
-    # both docs; the groupBy that dedups candidate pairs keeps the
-    # minimum position per side, feeding the positional filter below
-    # (r11-opt; replaces a plain dropDuplicates at identical shuffle
-    # shape). The length filter runs per-OCCURRENCE before that groupBy
-    # (it depends only on the pair's sizes, not the positions), so
-    # length-hopeless candidates never cross the dedup exchange.
+    # Candidates: every pair sharing a prefix shingle (posting lists are
+    # ≤ max_df ids by the df cap). The length filter runs inside the
+    # expansion, so length-hopeless pairs never leave it. The groupBy that
+    # dedups candidate pairs keeps each side's minimum colliding prefix
+    # position for the positional filter below.
+    length_ok = f"least(x.sz, y.sz) >= {t_eff!r}D * greatest(x.sz, y.sz)"
     cand = (
-        pref.groupBy("sh")
-        .agg(F.collect_list(F.struct("pos", "id", "sz", "rsz")).alias("ids"))
-        .where(F.size("ids") >= 2)
-        .select("ids", F.posexplode("ids").alias("__i", "x"))
-        .select(
-            F.col("x"), F.explode(F.expr("slice(ids, __i + 2, size(ids))")).alias("y")
-        )
-        .select(
-            F.expr("IF(x.id < y.id, x, y)").alias("a"),
-            F.expr("IF(x.id < y.id, y, x)").alias("b"),
-        )
-        .where(
-            F.least("a.sz", "b.sz") >= F.lit(t_eff) * F.greatest("a.sz", "b.sz")
-        )
+        _bucket_pairs(pref, ["sh"], ["pos", "id", "sz", "rsz"], keep=length_ok)
         .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .agg(
             F.min("a.pos").alias("pa"),
@@ -289,13 +277,11 @@ def jaccard_pairs(
             F.min("b.rsz").alias("rsz_b"),
         )
     )
-    # PPJoin prefilters BEFORE the in-row verification, on the carried
-    # int columns — candidates must survive BOTH before they ever carry
-    # a shingle ARRAY through a join (the arrays are ~100× wider than
-    # the int rows, and the id_b attach exchange used to ship arr_a for
-    # every unfiltered candidate — 250 MB of the pre-r11 plan's shuffle):
-    # 1. length filter (applied per-occurrence above, before the dedup
-    #    exchange): jaccard ≥ t needs inter ≥ t·union ≥ t·max(|A|,|B|)
+    # PPJoin prefilters run on the carried int columns, so a candidate
+    # must survive both before it carries a shingle array (~100× wider
+    # than the int row) through a join:
+    # 1. length filter (per occurrence, inside the expansion above):
+    #    jaccard ≥ t needs inter ≥ t·union ≥ t·max(|A|,|B|)
     #    and inter ≤ min(|A|,|B|), so min ≥ t·max is necessary.
     # 2. positional filter (PPJoin-family, set-based form): both rare
     #    arrays are sorted by the same global (df, sh) order, so for the
@@ -316,11 +302,9 @@ def jaccard_pairs(
     #    Both filters are conservative (t_eff ≤ t), so the emitted pair
     #    set is unchanged — the DuckDB twin needs no mirror.
     # Both array attach joins pair corpus-scale relations and are pinned
-    # sort-merge: under the local session's 64 MB broadcast threshold the
-    # optimizer read their COMPRESSED shuffle bytes as broadcastable (the
-    # array frame decompresses ~10× as a hash relation) and the x64
-    # rehearsal OOM'd the driver; SMJ spills instead, and is the plan a
-    # default-threshold cluster picks anyway.
+    # sort-merge: the optimizer reads their compressed shuffle bytes as
+    # broadcastable, but the array frame decompresses ~10× as a hash
+    # relation and exhausts the driver at x64 scale; SMJ spills instead.
     arrs = doc_sets.select("id", "arr")
     required = F.lit(t_eff) / F.lit(1.0 + t_eff) * (F.col("sz_a") + F.col("sz_b"))
     out = (
@@ -495,16 +479,11 @@ def minhash_lsh_pairs(
     # surviving DISTINCT pairs afterwards by two id-equi-joins against the
     # persisted signature frame.
     #
-    # r12 measured-and-REJECTED: the (band, bh) bucket aggregate with
-    # in-row pair expansion (the shape that won for simhash/jaccard/
-    # embedding-LSH) is ~0.5 s SLOWER here at sf0.1 (warm 0.9–1.0 s
-    # self-join vs 1.45 s aggregate, iso noop ×3): this banded frame is
-    # three ints per row with NO array payload, so the local plan
-    # broadcasts it (zero extra exchange) and the broadcast estimate is
-    # sound — the compressed-bytes underestimation that OOM'd the
-    # array-carrying jaccard/simhash joins at x64 does not apply, and
-    # the un-pinned join flips to SMJ adaptively as the relation grows
-    # (x64 rehearsal: linear). Keep the join.
+    # A self-join, not _bucket_pairs: the banded frame is three ints per
+    # row with no array payload, so the local plan broadcasts it (zero
+    # extra exchange) and the un-pinned join turns sort-merge adaptively
+    # as the relation grows. The bucket aggregate measured ~0.5 s slower
+    # here at sf0.1 (warm 0.9–1.0 s join vs 1.45 s aggregate).
     bands_df = _banded_frame(sig, bands, r)
     cand = (
         bands_df.alias("a")
@@ -573,30 +552,24 @@ def simhash(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", bits: int = 60
 ) -> DataFrame:
     """SimHash over word tokens: bit j = sign(Σ_tokens ±1). 60-bit
-    fingerprints by default (r11): the banded candidate join's key domain
-    is carved out of the fingerprint, and the previous 32-bit/byte-band
-    scheme's 1024-key domain made bucket occupancy — and candidate pairs
-    — grow QUADRATICALLY with the corpus (285× wall at ×64 data in the
-    scale rehearsal). 60 md5 bits is what both engines can carry in an
-    int64 (functions h60/h60_sql).
+    fingerprints by default: the banded candidate key domain is carved
+    out of the fingerprint, and a narrow domain makes bucket occupancy —
+    and candidate pairs — grow quadratically with the corpus. 60 md5 bits
+    is what both engines can carry in an int64 (functions h60/h60_sql).
 
     Single-pass plan: explode tokens once, hash each token ONCE, then one
     hash aggregation carries all 60 per-bit sums (partial+final, map-side
-    combine). An earlier formulation used per-bit higher-order
-    ``aggregate`` expressions over the token array — Catalyst does not
-    CSE the shared tokenize+md5 subexpression across them, so the text
-    was re-tokenized and re-hashed once per bit (~40× slower at sf0.1,
-    measured).
+    combine). Per-bit higher-order ``aggregate`` expressions over the
+    token array would re-tokenize and re-hash the text once per bit:
+    Catalyst does not CSE the shared subexpression across them.
     """
     t = _norm_text(F.col(text_col))
     toks = F.filter(F.split(t, r"\W+"), lambda w: F.length(w) > 0)
     ids = df.select(F.col(id_col).alias("id"), toks.alias("__toks"))
-    # explode_OUTER keeps token-less docs as one NULL-hash row (r11-opt):
-    # h60(NULL) is NULL, every bit condition is then NULL → the -1 arm, so
-    # all 60 sums come out negative and the fingerprint is 0 — exactly
-    # what the old  ids LEFT JOIN sums  + coalesce(sh, 0) produced, minus
-    # one whole source scan and an id-scale join+exchange per call site
-    # (this subplan runs on BOTH sides of the banded self-join).
+    # explode_OUTER keeps token-less docs as one NULL-hash row: h60(NULL)
+    # is NULL, every bit condition is then NULL → the -1 arm, so all 60
+    # sums come out negative and the fingerprint is 0, with no second
+    # scan or join to re-attach token-less ids.
     tok_hashes = ids.select("id", F.explode_outer("__toks").alias("__w")).select(
         "id", H.h60(F.col("__w")).alias("h")
     )
@@ -648,15 +621,15 @@ def simhash_near_pairs(
     fingerprint into 6 blocks of 10 bits; a pair within hamming ≤ r has
     flipped bits in at most r blocks, so it agrees EXACTLY on some
     (6 − r)-block combination — index every C(6, 6−r) combination as an
-    equi-join key. At r = 3 that is 20 keys per doc over a 2³⁰ key
-    domain. The previous 4×8-bit byte-banding had a FIXED 1024-key
-    domain, so bucket occupancy — and candidate pairs — grew
-    quadratically with the corpus: the ×64 scale rehearsal measured 285×
-    wall (single-task bucket stragglers); this shape's key domain keeps
-    random collisions rare at any realistic corpus size, with candidate
-    volume driven by true near-dup clusters only. ``radius`` stays capped
+    bucket key. At r = 3 that is 20 keys per doc over a 2³⁰ key domain,
+    so random collisions stay rare at any realistic corpus size and
+    bucket occupancy follows true near-dup clusters. ``radius`` is capped
     at 3 — beyond that the combination count explodes and recall silently
     degrades on narrower blocks.
+
+    Candidates come from :func:`_bucket_pairs` over the (band, key)
+    buckets, with the hamming test inside the expansion; a pair is
+    emitted once however many buckets it shares.
     """
     if not 0 <= radius <= 3:
         raise ValueError(
@@ -687,56 +660,16 @@ def simhash_near_pairs(
             )
         ).alias("__b"),
     ).select("id", "simhash", "__b.band", "__b.bkey")
-    # Candidate generation is ONE groupBy over the banded frame with
-    # IN-ROW pair expansion (r12-opt; the shape that fixed jaccard): each
-    # (band, bkey) bucket collects its (id, simhash) occupants — the key
-    # domain is 2³⁰, so occupancy is near-dup-cluster-sized, not
-    # corpus-sized — and emits its hamming-filtered pairs without any
-    # join. The self-join this replaces ran the WHOLE signature subplan
-    # (scan + token explode + 60-sum aggregate) once per side plus two
-    # sorted band-key exchanges; AQE's runtime stage reuse de-duplicated
-    # the signature stages but both SMJ sorts and the downstream pair
-    # stage remained (measured: 3.2–3.9 s warm isolated at sf0.1 vs
-    # 2.0–2.3 s for this shape). Earlier rejected alternatives for the
-    # double computation — .cache() (InMemoryRelation barrier) and lazy
-    # localCheckpoint (ExistingRDD breaks codegen, 15–33 s) — are moot:
-    # there is no second side anymore.
-    #
-    # Memory shape: the pair expansion is TWO chained Generates
-    # (posexplode of the bucket, then explode of the per-pivot tail
-    # slice), so a bucket of m docs streams its C(m, 2) candidates one
-    # pivot at a time with O(m) bytes per row — the same streaming
-    # behaviour as the SMJ it replaces (whose buffered side was also the
-    # full key group) — rather than one flatten() materializing C(m, 2)
-    # structs in a single row. The hamming filter sits INSIDE the tail
-    # transform, so non-near-dup candidates die before the second
-    # Generate emits them. collect_list holds one bucket in memory at
-    # finalization (ObjectHashAggregate spills between groups); a
-    # degenerate exact-dup megacluster makes THAT list corpus-sized —
-    # the module's cheapest-first contract (exact_duplicates runs before
-    # near-dup passes) is what bounds it, exactly as the SMJ shape's
-    # single-key reduce task was what bounded the old plan.
-    bucket = (
-        banded.groupBy("band", "bkey")
-        .agg(F.collect_list(F.struct("id", "simhash")).alias("xs"))
-        .where(F.size("xs") >= 2)
-    )
-    tail = (
-        "filter(transform(slice(xs, __i + 2, size(xs)), y -> "
-        "IF(x.id < y.id, "
-        "struct(x.id AS id_a, y.id AS id_b, "
-        "bit_count(x.simhash ^ y.simhash) AS h), "
-        "struct(y.id AS id_a, x.id AS id_b, "
-        "bit_count(x.simhash ^ y.simhash) AS h))), "
-        f"p -> p.h <= {int(radius)})"
-    )
+    near = f"bit_count(x.simhash ^ y.simhash) <= {int(radius)}"
     return (
-        bucket.select("xs", F.posexplode("xs").alias("__i", "x"))
-        .select(F.explode(F.expr(tail)).alias("p"))
-        # a pair sharing several bands/buckets appears once per bucket;
-        # hamming is a function of the pair, so first == min
-        .groupBy(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
-        .agg(F.min("p.h").cast("int").alias("hamming"))
+        _bucket_pairs(banded, ["band", "bkey"], ["id", "simhash"], keep=near)
+        .select(
+            F.col("a.id").alias("id_a"),
+            F.col("b.id").alias("id_b"),
+            F.expr("bit_count(a.simhash ^ b.simhash)").alias("hamming"),
+        )
+        # a pair sharing several buckets appears once per bucket
+        .distinct()
     )
 
 

@@ -176,15 +176,16 @@ class PCAModel:
     with a non-null, dim-length embedding) — exposed so callers that need
     the same count (e.g. the covariance denominator in the spectral
     bridge queries) can reuse it instead of running a second count job
-    over the corpus (r12-opt; value-identical by construction: the SQL
-    twin's ``len(embedding) = dim`` predicate selects the same rows)."""
+    over the corpus (value-identical by construction: the SQL twin's
+    ``len(embedding) = dim`` predicate selects the same rows). It is
+    required: no default count gives a meaningful denominator."""
 
     def __init__(
         self,
         mean: np.ndarray,
         components: np.ndarray,
         explained: np.ndarray,
-        n: int = 0,
+        n: int,
     ):
         self.mean = mean
         self.components = components  # (k, d), orthonormal rows

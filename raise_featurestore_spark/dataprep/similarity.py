@@ -12,15 +12,11 @@
 - **embedding_near_dup_pairs**: near-duplicate detection — banded
   sign-LSH candidates (B bands × r planes each; a pair is a candidate if
   it agrees on ALL r planes of ANY band), exact cosine ≥ τ on the
-  deduped candidates. The per-band key width r is N-ADAPTIVE: r grows
-  with log2(corpus rows) so the key domain scales with the corpus and
-  expected bucket occupancy stays constant — a FIXED plane count (the
-  pre-r11 design: one band of 6 planes = 64 buckets forever) makes
-  bucket occupancy grow linearly and the within-bucket self-join
-  quadratically, the same fixed-domain ceiling the r11 rehearsal
-  measured for byte-banded simhash. Banding (OR over B bands) keeps
-  recall from collapsing as r grows: P(candidate) = 1-(1-p^r)^B for
-  per-plane agreement p = 1-θ/π.
+  deduped candidates. The per-band key width r grows with log2(corpus
+  rows), so the key domain scales with the corpus and expected bucket
+  occupancy stays constant. Banding (OR over B bands) keeps recall from
+  collapsing as r grows: P(candidate) = 1-(1-p^r)^B for per-plane
+  agreement p = 1-θ/π.
 
 Hyperplanes are ±1 vectors from ``random.Random(seed)`` — embedded as
 literals into both the Spark plan and the DuckDB oracle SQL, so both
@@ -36,6 +32,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from raise_featurestore_spark.dataprep.dedup import _bucket_pairs
 from raise_featurestore_spark.functions import vector as V
 from raise_featurestore_spark.functions.stable import grid_snap, grid_snap_sql
 
@@ -102,8 +99,8 @@ def _dot_chain(plane: list[int], elem) -> str:
 
 def _band_key_expr(plane_slice: list[list[int]], elem) -> str:
     """Band key = Σ 2^i · [v·h_i > 0] over the slice, as ONE SQL string
-    (string-built: py4j per-node Column construction costs ~0.3 ms/node
-    and the r11 literal-map experiment rejected exactly that class)."""
+    (string-built: py4j per-node Column construction costs ~0.3 ms/node,
+    which a Column-built literal map pays per plane element)."""
     bits = [
         f"CASE WHEN {_dot_chain(p, elem)} > 0.0 THEN CAST({2 ** i} AS BIGINT) "
         f"ELSE CAST(0 AS BIGINT) END"
@@ -565,7 +562,6 @@ def brute_force_batch_topk(
 def embedding_near_dup_pairs(
     df: DataFrame,
     threshold: float = 0.95,
-    planes: list[list[int]] | None = None,
     dim: int = 64,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
@@ -576,51 +572,23 @@ def embedding_near_dup_pairs(
     = agrees on ALL r planes of ANY of ``bands`` bands, r n-adaptive
     (:func:`band_width`), exact cosine on the deduped candidates.
 
-    Scale contract (the r11 rehearsal finding this rebuild answers): the
-    pre-r11 single-band fixed-6-plane design has a FIXED 64-key domain,
-    so bucket occupancy grows linearly with the corpus and the
-    within-bucket self-join quadratically — the same ceiling as
-    byte-banded simhash. Here the per-band key domain is 2^band_width(n)
-    ≥ n/16, so expected occupancy (and per-key join work) is constant at
-    any corpus size; banding keeps recall from collapsing as r grows
-    (P = 1-(1-p^r)^bands).
+    The per-band key domain is 2^band_width(n) ≥ n/16, so expected bucket
+    occupancy is constant at any corpus size; banding keeps recall from
+    collapsing as r grows (P = 1-(1-p^r)^bands).
 
-    All band keys are computed in ONE Arrow pandas-UDF pass (the
-    ivf_assign precedent: per-row work is a dim×(bands·r) sign-matrix
-    product, vectorized over rows — a JVM expression for this is either
-    an interpreted higher-order fold or a janino-overflow flat chain,
-    both measured ~10 s/query at sf0.1). Accumulation is SEQUENTIAL over
+    All band keys are computed in ONE Arrow pandas-UDF pass: per-row work
+    is a dim×(bands·r) sign-matrix product, vectorized over rows. The JVM
+    expression alternatives are an interpreted higher-order fold or a
+    flat chain that overflows janino. Accumulation is SEQUENTIAL over
     dimensions (vectorized over rows and planes), so each dot's rounding
     order is bit-identical to the oracle's left-to-right ± element chain.
-    Candidates come from ONE (band, key) groupBy with streaming in-row
-    pair expansion (r12 — see the inline comment), not a self-join: the
-    vectors cross a single unsorted exchange once, and the former
-    broadcast-vs-SMJ question for the join (the jaccard x64 OOM class)
-    no longer exists because there is no join. Multi-band duplicates are
-    removed by ONE final DISTINCT after the threshold filter, where the
-    relation is smallest.
+    Candidates come from :func:`_bucket_pairs` over the (band, key)
+    buckets, so the vectors cross one unsorted exchange once. Multi-band
+    duplicates are removed by ONE final DISTINCT after the threshold
+    filter, where the relation is smallest.
 
     Plan build is EAGER (one count() job) to derive the band width, the
-    same documented posture as compile_correlation's rank maps. Passing
-    explicit ``planes`` keeps the legacy single-band fixed-plane
-    semantics for callers that pinned them."""
-    if planes is not None:
-        with_b = df.select(
-            F.col(id_col).alias("id"),
-            F.col(emb_col).cast("array<double>").alias("v"),
-            bucket_col(F.col(emb_col), planes).alias("b"),
-        )
-        a, b = with_b.alias("a"), with_b.alias("b")
-        cos = V.cosine_similarity(F.col("a.v"), F.col("b.v"))
-        return (
-            a.join(b, (F.col("a.b") == F.col("b.b")) & (F.col("a.id") < F.col("b.id")))
-            .select(
-                F.col("a.id").alias("id_a"),
-                F.col("b.id").alias("id_b"),
-                grid_snap(cos, round_to).alias("cosine"),
-            )
-            .where(F.col("cosine") >= threshold)
-        )
+    same documented posture as compile_correlation's rank maps."""
     r = band_width(df.count())
     pool = hyperplanes(dim, bands * MAX_BAND_WIDTH, seed=13)
     # sign matrix S[j, c]: column c = bit i of band b (c = b*r + i)
@@ -706,47 +674,12 @@ def embedding_near_dup_pairs(
     keyed = base.select(
         "id", "v", F.posexplode(_band_keys("v")).alias("band", "key")
     )
-    # Candidate generation is ONE groupBy over the keyed frame with
-    # in-row pair expansion (r12-opt; the simhash/jaccard shape): each
-    # (band, key) bucket collects its (id, v) occupants — expected
-    # occupancy is pinned at ~_BAND_TARGET_ROWS by the n-adaptive width,
-    # so the list is small at ANY corpus size — and streams its pairs
-    # through two chained Generates (posexplode of the bucket, then
-    # explode of the per-pivot tail slice: O(bucket) bytes per row, the
-    # same streaming class as the SMJ's buffered key group). This
-    # replaces the banded self-join, which ran the scan + the _band_keys
-    # Arrow UDF once PER SIDE and paid two sorted band-key exchanges of
-    # the vector-carrying rows; now the vectors cross one unsorted
-    # exchange once. The _pair_cos UDF sees the same candidate multiset
-    # as the join produced (one occurrence per shared bucket); the
-    # multi-band duplicates are still removed by the ONE final DISTINCT
-    # after the threshold filter, where the relation is smallest.
-    bucket = (
-        keyed.groupBy("band", "key")
-        .agg(F.collect_list(F.struct("id", "v")).alias("xs"))
-        .where(F.size("xs") >= 2)
-    )
-    pairs = (
-        bucket.select("xs", F.posexplode("xs").alias("__i", "x"))
-        .select(
-            F.col("x"),
-            F.explode(F.expr("slice(xs, __i + 2, size(xs))")).alias("y"),
-        )
-        .selectExpr(
-            "IF(x.id < y.id, x.id, y.id) AS id_a",
-            "IF(x.id < y.id, y.id, x.id) AS id_b",
-            # _pair_cos is bit-symmetric in its arguments (per-dim
-            # products commute; the norm product is the same either
-            # way), so pair orientation cannot change the value
-            "x.v AS va",
-            "y.v AS vb",
-        )
-    )
     return (
-        pairs.select(
-            "id_a",
-            "id_b",
-            grid_snap(_pair_cos(F.col("va"), F.col("vb")), round_to).alias("cosine"),
+        _bucket_pairs(keyed, ["band", "key"], ["id", "v"])
+        .select(
+            F.col("a.id").alias("id_a"),
+            F.col("b.id").alias("id_b"),
+            grid_snap(_pair_cos(F.col("a.v"), F.col("b.v")), round_to).alias("cosine"),
         )
         .where(F.col("cosine") >= threshold)
         .distinct()
@@ -756,7 +689,6 @@ def embedding_near_dup_pairs(
 def embedding_near_dup_pairs_sql(
     table: str,
     threshold: float = 0.95,
-    planes: list[list[int]] | None = None,
     dim: int = 64,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
@@ -768,15 +700,6 @@ def embedding_near_dup_pairs_sql(
     low band_width(COUNT(*)) bits — bit-identical to the Spark side
     building only the first r planes (bit i of the masked key = plane i
     of the band's pool slice in both engines)."""
-    if planes is not None:
-        b = bucket_sql(f"CAST({emb_col} AS DOUBLE[])", planes)
-        src = f"(SELECT {id_col} AS id, CAST({emb_col} AS DOUBLE[]) AS v, {b} AS b FROM {table}) "
-        cos = "list_cosine_similarity(a.v, b.v)"
-        return (
-            f"SELECT a.id AS id_a, b.id AS id_b, {grid_snap_sql(cos, round_to)} AS cosine "
-            f"FROM {src} a JOIN {src} b ON a.b = b.b AND a.id < b.id "
-            f"WHERE {grid_snap_sql(cos, round_to)} >= {threshold}"
-        )
     pool = hyperplanes(dim, bands * MAX_BAND_WIDTH, seed=13)
     arms = " UNION ALL ".join(
         f"SELECT id, v, {bd} AS band, "
@@ -852,7 +775,6 @@ def quantize_int8_sql(table: str, id_col: str = "vec_id", emb_col: str = "embedd
 def semantic_dedup_clusters(
     df: DataFrame,
     threshold: float = 0.95,
-    planes: list[list[int]] | None = None,
     dim: int = 64,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
@@ -869,7 +791,7 @@ def semantic_dedup_clusters(
     :func:`embedding_near_dup_pairs`); CC is the same shuffles-per-round
     plan as ``dedup_clusters``."""
     pairs = embedding_near_dup_pairs(
-        df, threshold=threshold, planes=planes, dim=dim,
+        df, threshold=threshold, dim=dim,
         id_col=id_col, emb_col=emb_col,
     )
     from raise_featurestore_spark.dataprep.components import connected_components
@@ -881,7 +803,6 @@ def semantic_dedup_clusters(
 def semantic_dedup_clusters_sql(
     table: str,
     threshold: float = 0.95,
-    planes: list[list[int]] | None = None,
     dim: int = 64,
     id_col: str = "vec_id",
     emb_col: str = "embedding",
@@ -891,7 +812,7 @@ def semantic_dedup_clusters_sql(
 
     inner = components_sql(
         embedding_near_dup_pairs_sql(
-            table, threshold=threshold, planes=planes, dim=dim,
+            table, threshold=threshold, dim=dim,
             id_col=id_col, emb_col=emb_col,
         )
     )

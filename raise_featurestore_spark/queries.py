@@ -3259,111 +3259,6 @@ register(
 )
 
 
-# --------------------------------------------------------------------------
-# Registry ordering: harnesses that process queries in registration order
-# verdict the FIRST 50 slots each round. Rotate so the least-recently-
-# verdicted entries come first. The facts below are DERIVED, not asserted:
-# scripts/rotation_audit.py recomputes every query's latest verdict from
-# the CORRECTNESS_r*.json artifacts and prints the next round's debt, and
-# scripts/freeze_manifest.py + tests/test_round_lint.py fail the suite if
-# an implementation changes after its latest verdict without the query
-# re-entering this window (the r9 wrong-window-comment class, now
-# mechanically checked end-to-end).
-#
-# Round-11 rotation (VERDICT r10 item 1), exactly rotation_audit's r11
-# debt head: (a) the 4 r7-latest deferrals from the r10 window
-# (agg_global_stats_approx, expr_case_when, vector_norm_dot,
-# dedup_exact_keepers); (b) 39 of the 42 r8-latest entries (the other 3
-# defer to r12, below); (c) the 7 queries
-# whose r11 rewrite postdates their latest verdict — corr_matrix_wide
-# (fused single-aggregate pearson+spearman plan,
-# analytics/correlation.correlation_matrix_dual), corr_spearman_wide_grid
-# (JVM partial-agg rank-map build + persisted snapped frame),
-# job_upsert_merge (writer commit prune protects concurrently staged
-# generations, io/writer.py), and dedup_ngram_jaccard (candidate
-# generation rebuilt as grouped in-row pair expansion after the x64
-# scale rehearsal OOM'd the self-join's hot-set broadcast; attach joins
-# pinned sort-merge) — plus dedup_simhash_pairs, whose banding was
-# rebuilt on 60-bit fingerprints with 6-block-combination keys after the
-# same rehearsal measured the old byte-band scheme's fixed 1024-key
-# domain going quadratic (285x wall at x64), and dedup_embedding_cosine
-# + semantic_dedup_clusters, whose shared pair kernel was rebuilt on
-# banded n-adaptive sign-LSH after the 4th rehearsal sweep caught the
-# same fixed-domain ceiling (one band of 6 planes = 64 buckets forever)
-# hanging at x64. That is 53 candidates for 50 slots; the three
-# deferrals, each with a shared-path twin staying in the window plus an
-# independent pytest pin, head the r12 debt:
-# set_intersect_retained_buyers (r8; EXCEPT twin
-# set_except_churned_buyers stays, shared set-op compilation),
-# join_anti_inactive_customers (r8; EXISTS twin
-# join_semi_high_value_customers stays, shared semi/anti path), and
-# outlier_flags_zscore (r8; outlier_flags_iqr + agg_winsorized_price
-# stay, shared fused snapped-bounds path in analytics/outliers.py).
-#
-# Inert-change note: components.py gained a LAST_ROUNDS diagnostic global
-# (value-inert) read by the scale rehearsal — dedup_clusters (r9) keeps
-# its verdict and heads the r12 rotation debt with the other r9-latest
-# entries (semantic_dedup_clusters, originally in this note, was later
-# rewritten by the 4th rehearsal sweep and is windowed under (c)).
-# --------------------------------------------------------------------------
-
-_PROMOTED = [
-    # (a) the r10 window's four documented deferrals (r7-latest)
-    "agg_global_stats_approx",
-    "dedup_exact_keepers",
-    "expr_case_when",
-    "vector_norm_dot",
-    # (b) the 42 r8-latest entries (two-round staleness boundary)
-    "agg_cube_status_priority",
-    "agg_global_stats",
-    "agg_pivot_status_by_priority",
-    "agg_rollup_flag_status",
-    "agg_winsorized_price",
-    "asof_salted_spine",
-    "cluster_balanced_sample",
-    "cluster_kmeans_report",
-    "cohort_retention_weekly",
-    "dedup_substring_overlap",
-    "drift_order_status",
-    "embedding_drift_mmd_linear",
-    "embedding_drift_rff_mmd",
-    "feature_decay_ewma",
-    "feature_quantile_bins",
-    "feature_sequence_history",
-    "feature_standardize_z",
-    "forecast_backtest_naive",
-    "funnel_signup_view_purchase",
-    "join_cardinality_events",
-    "join_semi_high_value_customers",
-    "linkage_fuzzy_part_names",
-    "lookup_filter_project",
-    "lookup_sample_events",
-    "mix_recipe_budget",
-    "outlier_flags_iqr",
-    "profile_table_events",
-    "quality_fk_integrity",
-    "quality_orders",
-    "rollup_incremental_daily",
-    "sample_weighted_aes",
-    "set_except_churned_buyers",
-    "skew_report_orders",
-    "stattest_ks",
-    "stattest_mannwhitney",
-    "text_encoding_report",
-    "text_tfidf_keywords",
-    "version_diff_value",
-    "zorder_morton_orders",
-    # (c) rewritten this round after their latest verdict
-    "dedup_simhash_pairs",
-    "corr_matrix_wide",
-    "corr_spearman_wide_grid",
-    "dedup_ngram_jaccard",
-    "job_upsert_merge",
-    "dedup_embedding_cosine",
-    "semantic_dedup_clusters",
-]
-
-
 def prime_reference_artifacts(spark: SparkSession, sf_dir: str) -> None:
     """Build the train-once reference artifacts (bigram LM models, IVF
     centroids + assigned corpus, co-purchase edge list) if absent — the
@@ -3377,18 +3272,6 @@ def prime_reference_artifacts(spark: SparkSession, sf_dir: str) -> None:
     _lm_model_cached(spark, sf_dir, "doc_id % 2 = 0", 256)
     _ivf_index_cached(spark, sf_dir)
     _coparts_edges_cached(spark, sf_dir)
-
-
-def _reorder_registry(promoted: list[str]) -> None:
-    order = [n for n in promoted if n in QUERIES]
-    order += [n for n in QUERIES if n not in order]
-    for d in (QUERIES, ORACLES):
-        tail = {n: d[n] for n in order if n in d}
-        d.clear()
-        d.update(tail)
-
-
-_reorder_registry(_PROMOTED)
 
 
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:

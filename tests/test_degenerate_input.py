@@ -23,7 +23,7 @@ import os
 
 import pytest
 
-from tests.test_empty_input import EXPECTED_GUARDS
+from tests.test_empty_input import EXPECTED_GUARDS, SWEEPS, swept_queries
 
 
 @pytest.fixture(scope="module")
@@ -59,12 +59,10 @@ def degen_sf_dir(spark, tmp_path_factory):
     return dst
 
 
-@pytest.mark.slow
-def test_every_query_survives_constant_tables(spark, degen_sf_dir):
-    import __spark_entry__ as em
-
+@pytest.mark.parametrize("names", SWEEPS)
+def test_every_query_survives_constant_tables(spark, degen_sf_dir, names):
     failures = []
-    for name, fn in sorted(em.queries().items()):
+    for name, fn in swept_queries(names):
         try:
             fn(spark, degen_sf_dir).count()
         except Exception as ex:  # noqa: BLE001 - classifying failure modes

@@ -22,6 +22,28 @@ EXPECTED_GUARDS = {
     "embedding_pca_frobenius_check": ValueError,  # same pca_fit guard
 }
 
+# The banded bucket-pair kernels (dataprep.dedup._bucket_pairs) run in the
+# default suite on every degenerate fixture; the constant fixture is their
+# exact-dup megabucket case. ``-m slow`` sweeps the whole registry.
+BANDED_PAIR_QUERIES = (
+    "dedup_ngram_jaccard",
+    "dedup_simhash_pairs",
+    "dedup_embedding_cosine",
+    "semantic_dedup_clusters",
+)
+SWEEPS = [
+    pytest.param(BANDED_PAIR_QUERIES, id="banded_pairs"),
+    pytest.param(None, id="all", marks=pytest.mark.slow),
+]
+
+
+def swept_queries(names):
+    """(name, fn) for the registered queries in ``names`` (None: all)."""
+    import __spark_entry__ as em
+
+    qs = em.queries()
+    return sorted(qs.items()) if names is None else [(n, qs[n]) for n in names]
+
 
 @pytest.fixture(scope="module")
 def empty_sf_dir(spark, tmp_path_factory):
@@ -33,12 +55,10 @@ def empty_sf_dir(spark, tmp_path_factory):
     return dst
 
 
-@pytest.mark.slow
-def test_every_query_survives_empty_tables(spark, empty_sf_dir):
-    import __spark_entry__ as em
-
+@pytest.mark.parametrize("names", SWEEPS)
+def test_every_query_survives_empty_tables(spark, empty_sf_dir, names):
     failures = []
-    for name, fn in sorted(em.queries().items()):
+    for name, fn in swept_queries(names):
         try:
             fn(spark, empty_sf_dir).count()
             if name in EXPECTED_GUARDS:

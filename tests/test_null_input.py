@@ -17,7 +17,7 @@ import os
 
 import pytest
 
-from tests.test_empty_input import EXPECTED_GUARDS
+from tests.test_empty_input import EXPECTED_GUARDS, SWEEPS, swept_queries
 
 
 @pytest.fixture(scope="module")
@@ -44,12 +44,10 @@ def null_sf_dir(spark, tmp_path_factory):
     return dst
 
 
-@pytest.mark.slow
-def test_every_query_survives_all_null_values(spark, null_sf_dir):
-    import __spark_entry__ as em
-
+@pytest.mark.parametrize("names", SWEEPS)
+def test_every_query_survives_all_null_values(spark, null_sf_dir, names):
     failures = []
-    for name, fn in sorted(em.queries().items()):
+    for name, fn in swept_queries(names):
         try:
             fn(spark, null_sf_dir).count()
         except Exception as ex:  # noqa: BLE001 - classifying failure modes

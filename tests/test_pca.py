@@ -74,3 +74,12 @@ def test_pca_project_reduces_reconstruction_error(spark, emb):
         # projection equals numpy ground truth
         np.testing.assert_allclose(P, Xc @ model.components[:k].T, atol=1e-8)
     assert errs[1] < errs[0]
+
+
+def test_pca_model_requires_n():
+    from raise_featurestore_spark.dataprep.pca import PCAModel
+
+    z = np.zeros(2)
+    with pytest.raises(TypeError):
+        PCAModel(z, np.eye(2), z)
+    assert PCAModel(z, np.eye(2), z, n=5).n == 5

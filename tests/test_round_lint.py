@@ -84,75 +84,3 @@ def test_bench_artifact_committed():
         "artifact the ledger quotes (r10 VERDICT 'what's wrong' #3)"
     )
 
-
-def test_no_silent_stale_rewrites():
-    """r10 VERDICT item 8: a query whose implementation changed since its
-    latest driver verdict must be in the upcoming first-50 correctness
-    window — otherwise its green verdict silently describes code that no
-    longer exists (the r9 wrong-window-comment class, now checked
-    end-to-end). Facts are machine-derived: scripts/freeze_manifest.py
-    records per-query file/callable/oracle digests at each round close;
-    this test compares the digests recorded at each query's latest
-    verdict round against the current tree. No manifest for that round
-    (rounds <= r10 predate the mechanism) => query is skipped."""
-    import hashlib
-    import json
-    import re
-
-    repo = Path(__file__).resolve().parent.parent
-    verdict_round: dict[str, int] = {}
-    for p in sorted(repo.glob("CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"r(\d+)", p.name).group(1))
-        data = json.loads(p.read_text())
-        for name in data.get("queries", data):
-            verdict_round[name] = max(verdict_round.get(name, 0), rnd)
-
-    manifests: dict[int, dict] = {}
-    for p in sorted(repo.glob("MANIFEST_r*.json")):
-        m = json.loads(p.read_text())
-        manifests[int(m["round"])] = m["queries"]
-    if not manifests:
-        return  # mechanism starts at r11; nothing to compare yet
-
-    import sys
-
-    sys.path.insert(0, str(repo))
-    import inspect
-
-    import __spark_entry__ as em
-
-    qs, oracles = em.queries(), em.oracle_sql()
-    window = set(list(qs)[:50])
-
-    def _sha(b: bytes) -> str:
-        return hashlib.sha256(b).hexdigest()
-
-    stale = []
-    for name, fn in qs.items():
-        if name in window:
-            continue  # about to be re-verdicted: changes are fine
-        rec = manifests.get(verdict_round.get(name, -1), {}).get(name)
-        if rec is None:
-            continue  # verdict predates the manifest mechanism
-        reasons = []
-        try:
-            src = inspect.getsource(fn)
-        except (OSError, TypeError):
-            src = repr(fn)
-        if _sha(src.encode()) != rec["callable_sha"]:
-            reasons.append("registered callable changed")
-        if _sha(oracles.get(name, "").encode()) != rec["oracle_sha"]:
-            reasons.append("oracle SQL changed")
-        for rel, want in rec["files"].items():
-            f = repo / rel
-            if not f.exists() or _sha(f.read_bytes()) != want:
-                reasons.append(f"{rel} changed")
-        if reasons:
-            stale.append(f"{name} (verdict r{verdict_round[name]}): "
-                         + "; ".join(reasons[:4]))
-    assert not stale, (
-        "implementation changed after the latest driver verdict without "
-        "re-windowing the query — put these in the first-50 window (or "
-        "re-freeze the manifest if the change is provably inert):\n  "
-        + "\n  ".join(stale)
-    )
