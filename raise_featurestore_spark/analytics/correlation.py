@@ -44,12 +44,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from raise_featurestore_spark.analytics.analysis import Correlation
+from raise_featurestore_spark.functions.conf_scope import scoped_persist
 from raise_featurestore_spark.functions.stable import grid_snap, grid_snap_sql
 
 DEFAULT_ROUND = 4
 # one-time (per process) call-site notice that the spearman DEFAULT is the
-# grid-snapped approximation since r10 (ADVICE r10: the semantics change
-# was silent for existing spec callers)
+# grid-snapped approximation, not exact row ranks — spec callers written
+# against exact spearman see the difference only through this notice
 _SPEARMAN_DEFAULT_NOTICED = False
 # guard for the single-task kendall kernel; Knight's O(n log n) keeps even
 # this cap at ~0.3 s (the old O(n²) kernel required 5k)
@@ -87,14 +88,12 @@ def _rank_cols(df: DataFrame, features: list[str]) -> DataFrame:
     ``rank() OVER (ORDER BY x)`` single-partition sort, and one range
     shuffle total instead of one per feature.
 
-    Shape (r9): melt → ``grouped_range_avg_ranks`` (ONE range shuffle of
+    Shape: melt → ``grouped_range_avg_ranks`` (ONE range shuffle of
     the k·n melted rows, ranks attached in-row — no value-level join
     back) → ONE pivot aggregate keyed by a row id assigned at a single
     projection node BEFORE the melt (so every exploded row of one input
-    row carries the same id). The previous per-feature join-back was k
-    sequential data-scale shuffles — 26 s for the k=10 PRD matrix at
-    sf0.1 vs ~8 s for this shape; the intermediate byval+equi-join
-    variant still paid a 10 s row-scale join."""
+    row carries the same id). A per-feature join-back costs k sequential
+    data-scale shuffles (26 s vs ~8 s for the k=10 PRD matrix at sf0.1)."""
     from raise_featurestore_spark.functions.prefix import grouped_range_avg_ranks
 
     n = len(features)
@@ -175,16 +174,16 @@ def compile_correlation(
 ) -> DataFrame:
     """Compile a :class:`Correlation` spec to its matrix DataFrame.
 
-    NOT always lazy (r10 ADVICE): the default spearman route
+    NOT always lazy: the default spearman route
     (``method='spearman'``, ``exact=False``) is the grid-snapped
     approximation, whose plan embeds driver-collected rank maps —
     building it runs two data-scale Spark jobs at COMPILE time (cell
     counts + rank-map collect, :func:`spearman_matrix_approx`). Plan-only
     / dry-run callers that must not touch data should pass
-    ``exact=True`` or inspect the spec without compiling. The routing
-    change from exact row-rank spearman to the grid default (r10) is
-    announced once per process via logging so existing spec callers can
-    discover it at call sites.
+    ``exact=True`` or inspect the spec without compiling. That the
+    default is the grid route, not exact row-rank spearman, is announced
+    once per process via logging so spec callers can discover it at call
+    sites.
     """
     df = _prepare(df, spec, seed)
     feats = spec.features
@@ -226,7 +225,7 @@ def compile_correlation(
 
                 logging.getLogger(__name__).info(
                     "Correlation(method='spearman') defaults to the "
-                    "grid-snapped approximation since r10 (near-ties "
+                    "grid-snapped approximation (near-ties "
                     "within half a sig-grid step become exact ties; "
                     "plan compilation is eager). Pass exact=True for "
                     "the previous exact row-rank semantics."
@@ -508,33 +507,25 @@ def _grid_rank_tables(
     dataprep/clustering.py). EAGER: runs one partial-count job at
     plan-build time (documented on the callers).
 
-    Shape (r11): melt all k features to long form (a NARROW map-side
+    Shape: melt all k features to long form (a NARROW map-side
     ``stack``) straight into a (feature, cell) hash aggregate — the
     PARTIAL aggregate is grid-bounded per partition, so the shuffle
     moves partitions × grid-cells rows regardless of corpus size — then
     the average ranks are a driver-side cumsum over the ≤12k collected
-    cells. The previous shape pushed the counted cells through a
-    range-partitioned prefix-sum window (an extra cell-scale range
-    exchange + window stage) and computed ranks distributedly — 5.5 s
-    cold / 2.0 s warm at sf0.1 vs 2.8 s cold / 1.8 s warm for this
-    all-JVM pass (a mapInPandas np.unique variant measured in between:
-    Python-worker spin-up dominated its cold time).
+    cells (a distributed prefix-sum window over the cells measured 5.5 s
+    cold / 2.0 s warm at sf0.1 vs 2.8 s / 1.8 s for this pass).
 
-    ``with_raw_bounds`` (r11-opt, the dual-matrix caller): the input
-    frame additionally carries ``__raw_{i}`` columns (the un-snapped
-    doubles, same index order as ``features``); the SAME cell aggregate
-    also folds per-cell min/max of the raw value, so the pearson
+    ``with_raw_bounds`` (the dual-matrix caller): the input frame
+    additionally carries ``__raw_{i}`` columns (the un-snapped doubles,
+    same index order as ``features``); the SAME cell aggregate also
+    folds per-cell min/max of the raw value, so the pearson
     constant-guard bounds come out of this collect as plan-time
-    literals — the separate ``_feature_bounds`` pass over the cached
-    base and its 1-row broadcast crossJoin disappear from the main
-    action. ``bounds[ft] = (raw_min, raw_max)``; IEEE min/max is exact,
-    so the literal bounds equal the old aggregate's bit-for-bit.
+    literals, with no ``_feature_bounds`` pass at action time.
+    ``bounds[ft] = (raw_min, raw_max)``, exact (IEEE min/max).
+    ``bounds`` is empty unless ``with_raw_bounds``; the return shape is
+    the same for every caller.
 
-    Always returns ``(tables, bounds)``; ``bounds`` is empty unless
-    ``with_raw_bounds`` (r11 ADVICE: a flag-dependent return shape is
-    easy to misuse from a new call site).
-
-    NaN precondition (r11 ADVICE): the driver-side min/max fold and the
+    NaN precondition: the driver-side min/max fold and the
     callers' ``mn == mx`` constant guard use Python float semantics, in
     which ``NaN == NaN`` is False — sound ONLY because every caller
     listwise-drops NULL/NaN rows (``na.drop``) before building the
@@ -543,8 +534,8 @@ def _grid_rank_tables(
     healthy instead of constant-NULL; keep the na.drop upstream.
     """
     k = len(features)
-    # group key is the INT feature index, not the feature-name string
-    # (r12-opt): the stack emits the key once per input row × k, so a
+    # group key is the INT feature index, not the feature-name string:
+    # the stack emits the key once per input row × k, so a
     # string key pays per-row string hashing/equality in the grid
     # aggregate's partial map for no information — the driver maps the
     # index back to the name after the collect. Counts/min/max are
@@ -660,11 +651,10 @@ def _rawmoment_corr_cells(
     # terms + ~90 finalization cells cost one py4j round-trip PER OPERATOR
     # when built from Column objects — measured +2.3 s of driver-side plan
     # construction per compile (the whole win of the faster aggregate,
-    # spent before the job started). Strings parse JVM-side. r12-opt: ONE
+    # spent before the job started). Strings parse JVM-side, and ONE
     # selectExpr ships the whole aggregate in a single py4j hop (an
     # aggregate-only projection resolves to a global Aggregate, exactly
-    # like .agg()) — the previous per-term F.expr construction was ~130
-    # round-trips of per-call plan-build latency (VERDICT r11 item 6).
+    # like .agg()).
     used = sorted({i for i, _, _ in cells} | {j for _, j, _ in cells})
     raw = frame.selectExpr(
         "CAST(COUNT(1) AS DOUBLE) AS __n",
@@ -700,8 +690,8 @@ def correlation_matrix_dual(
     cells the same searchsorted grid ranks — only the PLAN is fused:
 
     - the listwise-cleaned 10-column double projection is computed once
-      and ``persist()``-ed (populated by the eager rank-map job, so the
-      main action never re-reads parquet);
+      and cached with ``scoped_persist`` (populated by the eager rank-map
+      job, so the main action never re-reads parquet);
     - the pearson constant-guard columns and the spearman rank-lookup
       columns are emitted by ONE map-side projection of that cache;
     - all 2·C(k,2) correlation cells run in ONE aggregate pass (a single
@@ -720,12 +710,11 @@ def correlation_matrix_dual(
     k = len(features)
     base = df.na.drop(subset=features).select(
         *[F.col(ft).cast("double").alias(ft) for ft in features],
-        # snapped columns INSIDE the per-query cache (r12-opt): sig_round
-        # is a per-value string-parse scale (functions/stable._exp10) and
-        # was computed twice per row — once feeding the eager rank-map
-        # aggregate, once feeding the action's rank lookups. Caching the
-        # snapped value alongside the raw (2k doubles/row) computes it
-        # once; both consumers read the identical cached bits.
+        # snapped columns INSIDE the per-query cache: sig_round is a
+        # per-value string-parse scale (functions/stable._exp10) that both
+        # the eager rank-map aggregate and the action's rank lookups need.
+        # Caching the snapped value alongside the raw (2k doubles/row)
+        # computes it once; both consumers read the identical cached bits.
         *[
             sig_round(F.col(ft).cast("double"), sig_digits).alias(f"__sn_{i}")
             for i, ft in enumerate(features)
@@ -733,15 +722,10 @@ def correlation_matrix_dual(
     )
     # per-query cache: ≤ 2k doubles/row; both the eager rank-map job and
     # the main aggregate read it, so parquet is scanned exactly once.
-    base = base.persist()
+    base = scoped_persist(base)
     snapped_cols = [F.col(f"__sn_{i}") for i in range(k)]
     # ONE eager collect builds BOTH the rank maps and the pearson bounds
-    # (r11-opt): the raw doubles ride the same stack → grid-bounded cell
-    # aggregate as extra min/max buffers, so the old `_feature_bounds`
-    # pass over the cached base — a second full pass at action time,
-    # plus a 1-row broadcast crossJoin in the plan — disappears. IEEE
-    # min/max is exact, so the literal bounds (and the (mn+mx)/2
-    # midpoints below) are bit-identical to the aggregate they replace.
+    # (see _grid_rank_tables), so the action makes one pass over the cache.
     tables, bounds = _grid_rank_tables(
         base.select(
             *[c.alias(ft) for c, ft in zip(snapped_cols, features)],
@@ -853,7 +837,7 @@ def spearman_matrix_approx(
     # per-query cache (k doubles/row, LRU-evictable): the eager rank-map
     # job materializes it, the rank-attach aggregate re-reads it — one
     # source scan total instead of two.
-    snapped = snapped.persist()
+    snapped = scoped_persist(snapped)
     tables, _ = _grid_rank_tables(snapped, features)
     # ranks centered by their table midpoint (plan-time literals) — the
     # numerical precondition of the raw-moment cell aggregate; spearman

@@ -143,7 +143,7 @@ def pagerank(
     # no interleaving with other conf windows); a job another thread
     # plans on the same session during this short window gets a
     # non-adaptive but CORRECT plan — documented perf-only residual
-    # (conf_scope.py module docstring, ADVICE r7).
+    # (conf_scope.py module docstring).
     spark_s = df.sparkSession
     shuffle_p = shuffle_partitions(spark_s)
     with scoped_conf(spark_s, spark__sql__adaptive__enabled="false"):

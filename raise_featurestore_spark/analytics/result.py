@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from raise_featurestore_spark.analytics.freshness import CACHED, Freshness, ResultCache
 from raise_featurestore_spark.analytics.router import compile_analysis
+from raise_featurestore_spark.functions.conf_scope import cache_scope
 
 
 @dataclass
@@ -164,7 +165,8 @@ class AnalyticsClient:
         **kwargs: Any,
     ) -> AnalysisResult:
         def compute() -> pd.DataFrame:
-            return compile_analysis(df, spec, **kwargs).toPandas()
+            with cache_scope():
+                return compile_analysis(df, spec, **kwargs).toPandas()
 
         data = self.cache.get_or_compute(spec, compute, freshness)
         result = AnalysisResult(spec=spec, data=data)

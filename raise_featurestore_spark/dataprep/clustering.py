@@ -24,7 +24,8 @@ Plan shape per iteration (the canonical distributed Lloyd's):
 At 100 TB: `iters` corpus scans for the fit plus one for the report; the
 only shuffles are the k-row M-step aggregates. Persist the projected
 (id, vec) frame upstream if the source scan is expensive — the loop
-persists it for its own iterations and unpersists before returning.
+caches it for its own iterations in a nested ``cache_scope`` that releases
+it before returning.
 
 Oracle: `kmeans_report_sql` / `cluster_balanced_sample_sql` regenerate the
 entire iterative computation as chained CTEs (assignment via a
@@ -41,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from raise_featurestore_spark.functions.conf_scope import cache_scope, scoped_persist
 from raise_featurestore_spark.functions.stable import sig_round, sig_round_sql
 
 DEFAULT_K = 8
@@ -102,8 +104,8 @@ def kmeans_fit(
         ).where(F.lit(False))
     cents = {i: list(r.v) for i, r in enumerate(init)}
     dim = len(init[0].v)
-    pts = pts.persist()
-    try:
+    with cache_scope():
+        pts = scoped_persist(pts)
         for _ in range(iters - 1):
             assigned = _assign(pts, cents)
             # M-step as ONE posexplode + (cluster, dim) aggregate, not dim
@@ -131,8 +133,6 @@ def kmeans_fit(
             for cid, vec in new_cents.items():
                 cents[cid] = vec
         return _assign(pts, cents)
-    finally:
-        pts.unpersist()
 
 
 def kmeans_report(

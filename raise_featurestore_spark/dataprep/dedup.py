@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from raise_featurestore_spark.dataprep import hashing as H
+from raise_featurestore_spark.functions.conf_scope import scoped_persist
 from raise_featurestore_spark.functions.stable import grid_snap, grid_snap_sql
 
 DEFAULT_NGRAM = 5
@@ -167,7 +168,6 @@ def jaccard_pairs(
     threshold: float = 0.6,
     max_df: int = DEFAULT_MAX_DF,
     round_to: int = 4,
-    persist_shingles: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs by character-n-gram Jaccard ≥ threshold.
 
@@ -182,16 +182,9 @@ def jaccard_pairs(
     bucketed by shingle: each posting list holds ≤ max_df ids (the df
     cap), so per-bucket work is bounded at C(max_df, 2) pairs and there
     is nothing to salt or broadcast.
-
-    The shingle frame is consumed three times (df-cap, index join, sizes);
-    ``persist_shingles`` caches it for interactive/local use. At 100 TB pass
-    ``False`` and materialize ``shingles(...)`` to a parquet table first —
-    an executor-memory cache of a corpus-sized exploded frame is the wrong
-    tool there (same pattern as the simhash note below).
     """
-    sh = shingles(df, id_col, text_col, n)
-    if persist_shingles:
-        sh = sh.persist()
+    # consumed twice (df-cap aggregate, df-attach join)
+    sh = scoped_persist(shingles(df, id_col, text_col, n))
     df_counts = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("__df"))
     # SORT-MERGE, not broadcast, for the df-attach join: df_counts is the
     # corpus's DISTINCT-shingle relation — Catalyst's size estimate reads
@@ -248,11 +241,8 @@ def jaccard_pairs(
             ).alias("prefix"),
         )
     )
-    if persist_shingles:
-        # consumed twice (prefix index + array verification); one compact
-        # row per doc. At 100 TB this frame IS the signature store —
-        # materialize it to a table instead (same note as simhash below).
-        doc_sets = doc_sets.persist()
+    # consumed twice (prefix index, array verification); one row per doc
+    doc_sets = scoped_persist(doc_sets)
     # prefix rows carry the doc's (sz, rsz), so candidate pairs inherit
     # both sides' size metadata from the expansion with no attach join
     pref = doc_sets.select(
@@ -447,7 +437,6 @@ def minhash_lsh_pairs(
     seed: int = 7,
     min_est: float = 0.5,
     round_to: int = 4,
-    persist_signatures: bool = True,
 ) -> DataFrame:
     """Candidate near-dup pairs via banded minhash LSH, scored by the
     fraction of matching signature components (the minhash estimate of
@@ -465,14 +454,11 @@ def minhash_lsh_pairs(
     if k % bands != 0:
         raise ValueError("k must be divisible by bands")
     r = k // bands
-    sig = minhash_signatures(df, id_col, text_col, n, k, seed)
-    if persist_signatures:
-        # the banded frame self-joins below; without this the whole
-        # shingle-explode + k-minhash pipeline runs once per join side
-        # (no ReusedExchange for self-joins here — measured 2 parquet
-        # scans). One compact row per doc; at 100 TB materialize the
-        # signature table instead (same note as simhash below).
-        sig = sig.persist()
+    # read four times (both band-join sides, both signature attaches).
+    # Uncached, AQE shares the signature shuffle among them through 3
+    # ReusedExchange nodes; the cache still measured ~4% faster at sf0.1
+    # (k=16, bands=4, 4 cores).
+    sig = scoped_persist(minhash_signatures(df, id_col, text_col, n, k, seed))
     # Candidate generation shuffles ONLY (id, band, bh) — 3 narrow columns
     # per banded row, not the k signature components (k=128 at scale would
     # multiply the exploded shuffle ~40×). Signatures are attached to the
@@ -720,7 +706,6 @@ def incremental_minhash_dedup(
     seed: int = 7,
     min_est: float = 0.5,
     round_to: int = 4,
-    persist_signatures: bool = True,
 ) -> DataFrame:
     """Dedup a NEW batch against an EXISTING corpus: per new document, the
     best minhash-estimated match in the corpus (if any band collides) and
@@ -732,10 +717,11 @@ def incremental_minhash_dedup(
     corpus rows are ever scored; Catalyst broadcasts the new batch's band
     table when it is small, so the big side streams through unshuffled. In
     production the corpus signatures are materialized once (a table
-    partitioned by band hash — the same note as dedup.py's simhash
-    store-the-signatures pattern) and only APPENDED to as novel docs
-    arrive; here both sides are computed from text so the operator is
-    self-contained and oracle-checkable.
+    partitioned by band hash) and only APPENDED to as novel docs arrive;
+    here both sides are computed from text so the operator is
+    self-contained and oracle-checkable. Nothing is cached: AQE shares
+    each side's signature shuffle between its band join and its
+    signature attach (2 ``ReusedExchange`` nodes).
 
     Best-match choice is deterministic: max estimate, then min corpus id.
     """
@@ -748,23 +734,11 @@ def incremental_minhash_dedup(
     # minhash_lsh_pairs — at k=128 the banded shuffle would otherwise be
     # ~40× wider). The new batch's band table is the small side, so
     # Catalyst broadcasts it and the corpus streams through unshuffled.
-    # persist_signatures=False for REPEATED callers (the streaming curation
-    # loop runs this once per micro-batch): each call builds fresh frames
-    # the CacheManager can't dedup, so persisted entries would accumulate
-    # one corpus-sized cache per batch with no unpersist hook. The cost of
-    # False is recomputing each side's signature pipeline twice (banded +
-    # attach) within the single batch.
-    def signatures(df: DataFrame) -> DataFrame:
-        sig = minhash_signatures(df, id_col, text_col, n, k, seed)
-        return sig.persist() if persist_signatures else sig
-
-    def banded(sig: DataFrame) -> DataFrame:
-        return _banded_frame(sig, bands, r)
-
-    sn, sc = signatures(new_df), signatures(corpus_df)
+    sn = minhash_signatures(new_df, id_col, text_col, n, k, seed)
+    sc = minhash_signatures(corpus_df, id_col, text_col, n, k, seed)
     cand_ids = (
-        banded(sn).select(F.col("id").alias("new_id"), "band", "bh")
-        .join(banded(sc).select(F.col("id").alias("match_id"), "band", "bh"),
+        _banded_frame(sn, bands, r).select(F.col("id").alias("new_id"), "band", "bh")
+        .join(_banded_frame(sc, bands, r).select(F.col("id").alias("match_id"), "band", "bh"),
               on=["band", "bh"])
         .select("new_id", "match_id")
         .dropDuplicates(["new_id", "match_id"])

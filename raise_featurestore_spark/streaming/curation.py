@@ -62,12 +62,8 @@ def make_curation_batch_fn(
 
         if _corpus_nonempty(corpus_path):
             corpus = spark.read.parquet(corpus_path)
-            # persist_signatures=False: one call per micro-batch would
-            # otherwise leave a corpus-sized cached signature frame behind
-            # per batch (no unpersist hook once the verdicts are consumed)
             verdicts = incremental_minhash_dedup(
-                batch, corpus, id_col=id_col, text_col=text_col, min_est=min_est,
-                persist_signatures=False, **dedup_kw
+                batch, corpus, id_col=id_col, text_col=text_col, min_est=min_est, **dedup_kw
             )
             novel_ids = verdicts.where(~F.col("is_dup")).select(
                 F.col("new_id").alias(id_col)

@@ -74,6 +74,7 @@ def main() -> None:
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as em
 
+    from raise_featurestore_spark.functions.conf_scope import cache_scope
     from raise_featurestore_spark.session import get_spark
 
     spark = get_spark("driver-sim")
@@ -92,7 +93,8 @@ def main() -> None:
         qs = {n: f for n, f in qs.items() if any(p in n for p in pats)}
     ok = bad = 0
     for name in sorted(qs):
-        spark_pd = qs[name](spark, sf_dir).toPandas()
+        with cache_scope():
+            spark_pd = qs[name](spark, sf_dir).toPandas()
         if name not in oracles:
             print(f"{name}: ROWS-ONLY rows={len(spark_pd)}")
             continue

@@ -1,6 +1,6 @@
-"""bench.py artifact hygiene (VERDICT r11 item 9): a contended run must
-not silently replace the committed BENCH_local.json. Pure-Python unit
-tests of the guard predicate — no Spark session."""
+"""bench.py artifact hygiene: a contended, cross-config, partial or
+failed run must not silently replace the committed BENCH_local.json.
+Pure-Python unit tests of the guard predicate — no Spark session."""
 
 import importlib.util
 import os
@@ -28,7 +28,7 @@ def test_mild_drift_passes():
 
 
 def test_contended_run_rejected():
-    # r11 failure mode: everything 3x slower
+    # contended box: everything 3x slower
     med = bench.artifact_guard(_q(50), _q(50, scale=3.0))
     assert med == pytest.approx(3.0)
 
@@ -53,3 +53,42 @@ def test_few_commons_passes():
 def test_force_override(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_BENCH_FORCE", "1")
     assert bench.artifact_guard(_q(50), _q(50, scale=3.0)) is None
+
+
+_CFG = {"cpus": 4, "sf": 0.1, "commit": "abc1234"}
+
+
+def test_config_mismatch_rejected():
+    # an 8-core artifact vs a 4-core run: median ratio ~1.47 would pass
+    # the contention band, the config check must not
+    prev_cfg = dict(_CFG, cpus=8)
+    reason = bench.artifact_guard(_q(50), _q(50, scale=1.47), config=_CFG, prev_config=prev_cfg)
+    assert isinstance(reason, str) and "config" in reason
+
+
+def test_baseline_without_config_counts_as_different():
+    assert bench.artifact_guard(_q(50), _q(50), config=_CFG, prev_config=None) is not None
+
+
+def test_same_config_other_commit_passes():
+    prev_cfg = dict(_CFG, commit="0000000")
+    assert bench.artifact_guard(_q(50), _q(50), config=_CFG, prev_config=prev_cfg) is None
+
+
+def test_run_with_failures_rejected():
+    now = _q(50)
+    del now["q007"]
+    reason = bench.artifact_guard(_q(50), now, failures={"q007": "ValueError: boom"})
+    assert isinstance(reason, str) and "failed" in reason
+
+
+def test_coverage_drop_rejected():
+    reason = bench.artifact_guard(_q(50), _q(40))
+    assert isinstance(reason, str) and "40 queries" in reason
+
+
+def test_force_overrides_every_check(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_FORCE", "1")
+    assert bench.artifact_guard(
+        _q(50), _q(40), failures={"q045": "boom"}, config=_CFG, prev_config=None
+    ) is None

@@ -304,6 +304,7 @@ def test_jaccard_hot_prefix_shingle_grouped_pairs_same_results(spark):
     import duckdb
 
     from raise_featurestore_spark.dataprep.dedup import jaccard_pairs, jaccard_pairs_sql
+    from raise_featurestore_spark.functions.conf_scope import cache_scope
 
     # 12 docs sharing a long common run (the hot shingles) + distinct tails;
     # pairs within each trio are near-dups, across trios they are not
@@ -315,12 +316,11 @@ def test_jaccard_hot_prefix_shingle_grouped_pairs_same_results(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
 
     # max_df=12 admits the df=12 stop-shingles into every posting list
-    got = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in jaccard_pairs(
-            df, threshold=0.5, max_df=12, persist_shingles=False
-        ).collect()
-    }
+    with cache_scope():
+        got = {
+            (r["id_a"], r["id_b"]): r["jaccard"]
+            for r in jaccard_pairs(df, threshold=0.5, max_df=12).collect()
+        }
 
     con = duckdb.connect()
     con.execute("CREATE TABLE docs(doc_id BIGINT, text VARCHAR)")
@@ -337,12 +337,13 @@ def test_jaccard_hot_prefix_shingle_grouped_pairs_same_results(spark):
     # candidate dedup other than the df-cap and verification attaches —
     # pin it by checking the pair-expansion transform is in the plan and
     # no broadcast of a shingle-keyed relation is
-    plan = (
-        jaccard_pairs(df, threshold=0.5, max_df=12, persist_shingles=False)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    with cache_scope():
+        plan = (
+            jaccard_pairs(df, threshold=0.5, max_df=12)
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
+        )
     assert "collect_list" in plan and "slice" in plan, plan
 
 
@@ -360,6 +361,7 @@ def test_jaccard_positional_filter_differential_fuzz(spark):
     import duckdb
 
     from raise_featurestore_spark.dataprep.dedup import jaccard_pairs, jaccard_pairs_sql
+    from raise_featurestore_spark.functions.conf_scope import cache_scope
 
     rng = random.Random(1105)
     frags = ["".join(rng.choices("abcdefgh ", k=18)) for _ in range(12)]
@@ -375,12 +377,11 @@ def test_jaccard_positional_filter_differential_fuzz(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
 
     for threshold in (0.3, 0.5, 0.7):
-        got = {
-            (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in jaccard_pairs(
-                df, threshold=threshold, max_df=30, persist_shingles=False
-            ).collect()
-        }
+        with cache_scope():
+            got = {
+                (r["id_a"], r["id_b"]): r["jaccard"]
+                for r in jaccard_pairs(df, threshold=threshold, max_df=30).collect()
+            }
         want = {
             (r[0], r[1]): r[2]
             for r in con.sql(

@@ -31,8 +31,22 @@ BANDED_PAIR_QUERIES = (
     "dedup_embedding_cosine",
     "semantic_dedup_clusters",
 )
+# One registered query per engine package (the first module its wrapper
+# calls into), so every package meets the degenerate fixtures in the
+# default run; the analytics pick caches through scoped_persist.
+SMOKE_QUERIES = (
+    "corr_spearman_wide_grid",  # analytics
+    "dedup_incremental_batch",  # dataprep
+    "expr_case_when",  # expressions
+    "vector_norm_dot",  # functions
+    "zorder_morton_orders",  # io
+    "set_except_churned_buyers",  # queries
+    "window_tumbling_daily",  # streaming
+    "source_columnar_pushdown",  # transforms
+)
 SWEEPS = [
     pytest.param(BANDED_PAIR_QUERIES, id="banded_pairs"),
+    pytest.param(SMOKE_QUERIES, id="smoke"),
     pytest.param(None, id="all", marks=pytest.mark.slow),
 ]
 

@@ -184,10 +184,12 @@ def test_minhash_parity_pathological(patho):
         minhash_lsh_pairs,
         minhash_lsh_pairs_sql,
     )
+    from raise_featurestore_spark.functions.conf_scope import cache_scope
 
     df, con = patho
-    _assert_parity(
-        minhash_lsh_pairs(df, k=8, bands=2, min_est=0.5, persist_signatures=False),
-        con,
-        minhash_lsh_pairs_sql("documents", k=8, bands=2, min_est=0.5),
-    )
+    with cache_scope():
+        _assert_parity(
+            minhash_lsh_pairs(df, k=8, bands=2, min_est=0.5),
+            con,
+            minhash_lsh_pairs_sql("documents", k=8, bands=2, min_est=0.5),
+        )
