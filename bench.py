@@ -200,6 +200,15 @@ def main() -> None:
     timings: dict[str, float] = {}
     warm: dict[str, float] = {}
     failures: dict[str, str] = {}
+    # persisted + local-checkpoint RDDs: each scope must hand back what it took
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    rdds = {"before": persistent().size(), "peak": persistent().size()}
+
+    def run_scoped(fn) -> None:
+        with cache_scope():
+            fn(spark, sf_dir).toPandas()
+            rdds["peak"] = max(rdds["peak"], persistent().size())
+
     # Results materialize via Arrow toPandas(), not row-collect(): row
     # collect() serializes every row through the Python pickler and was ~3 s
     # of pure driver transfer on 600k-row outputs (measured: standardize
@@ -209,8 +218,7 @@ def main() -> None:
     for name, fn in sorted(entrymod.queries().items()):
         t0 = time.perf_counter()
         try:
-            with cache_scope():
-                fn(spark, sf_dir).toPandas()
+            run_scoped(fn)
             timings[name] = round(time.perf_counter() - t0, 3)
         except Exception as ex:  # keep benching even if one query breaks
             failures[name] = f"{type(ex).__name__}: {ex}"[:200]
@@ -223,8 +231,7 @@ def main() -> None:
         # timings already measured.
         t1 = time.perf_counter()
         try:
-            with cache_scope():
-                fn(spark, sf_dir).toPandas()
+            run_scoped(fn)
             warm[name] = round(time.perf_counter() - t1, 3)
         except Exception as ex:
             failures[f"{name} (warm)"] = f"{type(ex).__name__}: {ex}"[:200]
@@ -244,6 +251,7 @@ def main() -> None:
         "n_queries": len(timings),
         "warm_total": round(sum(warm.values()), 3),
         "artifact_prime_secs": prime_secs,
+        "persistent_rdds": {**rdds, "after": persistent().size()},
     }
     try:
         out["prd_targets"] = _prd_targets(spark, sf_dir)

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from raise_featurestore_spark.functions.conf_scope import (
+    scoped_checkpoint,
     scoped_conf,
     shuffle_partitions,
 )
@@ -52,9 +53,9 @@ def cooccurrence_edges(
     """(src, dst, w): how many baskets contain both items (directed both
     ways by construction). ``collect_set`` dedupes items per basket —
     an item repeated m times within one basket must contribute 1 to each
-    partner edge, not m (r5 review finding) — and the ordered pairs are
-    generated MAP-SIDE from each basket's item set (bounded: ≤ ~7 items
-    per order ⇒ ≤ 42 pairs), so the whole build is two shuffles (basket
+    partner edge, not m — and the ordered pairs are generated MAP-SIDE
+    from each basket's item set (bounded: ≤ ~7 items per order ⇒ ≤ 42
+    pairs), so the whole build is two shuffles (basket
     grouping, then the (src, dst) count) instead of the previous
     distinct + self-join + count three-shuffle plan, which also evaluated
     the distinct on both join sides. (Measured at sf0.1: the build itself
@@ -97,8 +98,8 @@ def pagerank(
 
     ``edges``: a pre-built (src, dst, w) co-occurrence table — e.g. the
     materialized output of :func:`cooccurrence_edges` kept as a stored
-    derived table and reused across analytics runs (r8 VERDICT item 5;
-    the reference's materialized-derived-state pattern,
+    derived table and reused across analytics runs (the reference's
+    materialized-derived-state pattern,
     raise_/analytics/live_table.py:162-209). The basket build was 4.5 s
     of the 5–6 s sf0.1 wall; reading the stored edges pays one
     repartition instead. When given, ``df``/``basket_col``/``item_col``
@@ -106,32 +107,29 @@ def pagerank(
     edges = (
         edges if edges is not None else cooccurrence_edges(df, basket_col, item_col)
     )
-    # localCheckpoint (eager): materializes the edge list ONCE and
-    # truncates its lineage, so the k iterations reuse stored blocks
-    # instead of re-running the basket build per reference. The node
-    # count reads CHECKPOINTED frames — a deg.count() before the
-    # checkpoint was a second full execution of the edge plan (r6 bench
-    # profiling; a persist() released before the caller's action was the
-    # r5 version of the same mistake).
+    # Eager checkpoint: materializes the edge list ONCE and truncates its
+    # lineage, so the k iterations reuse stored blocks instead of
+    # re-running the basket build per reference. The node count reads
+    # CHECKPOINTED frames; counting before the checkpoint would be a
+    # second full execution of the edge plan.
     #
-    # r8 (VERDICT item 7 attribution): the build previously also JOINED
-    # node-scale degrees onto the edge frame before checkpointing — an
-    # extra edge-scale hash(src) Exchange plus a 4th stored column per
-    # edge. Degrees now stay a separate node-scale frame (aggregated
-    # from the checkpointed edges — map-side partials, no edge-scale
-    # exchange) and ride the BROADCAST side of each iteration, keeping
-    # the per-edge arithmetic pr·w/wd bit-identical to the oracle.
+    # Degrees stay a separate node-scale frame (aggregated from the
+    # checkpointed edges — map-side partials, no edge-scale exchange) and
+    # ride the BROADCAST side of each iteration, keeping the per-edge
+    # arithmetic pr·w/wd bit-identical to the oracle. Joining them onto
+    # the edge frame would add an edge-scale hash(src) Exchange plus a
+    # 4th stored column per edge.
     #
-    # repartition(dst) BEFORE the checkpoint (r6 VERDICT item 5, the one
-    # perf-weak query): each iteration aggregates contributions BY dst,
-    # and with ~2.4M nearly-unique (src, dst) edges that groupBy was a
-    # full shuffle of the edge-scale frame PER ITERATION. The checkpoint
-    # preserves outputPartitioning (LogicalRDD keeps the physical plan's
-    # partitioning), the broadcast pr-join preserves the streamed side's
-    # layout, so HashPartitioning(dst) already satisfies the aggregate's
-    # clustering — zero per-iteration edge-scale Exchange (plan-asserted
-    # in test_graph.py). One extra edge-scale shuffle at build time buys
-    # k shuffle-free iterations.
+    # repartition(dst) BEFORE the checkpoint: each iteration aggregates
+    # contributions BY dst, and with ~2.4M nearly-unique (src, dst) edges
+    # at sf0.1 that groupBy would be a full shuffle of the edge-scale
+    # frame PER ITERATION. The checkpoint preserves outputPartitioning
+    # (LogicalRDD keeps the physical plan's partitioning), the broadcast
+    # pr-join preserves the streamed side's layout, so
+    # HashPartitioning(dst) already satisfies the aggregate's clustering —
+    # zero per-iteration edge-scale Exchange (plan-asserted in
+    # test_graph.py). One extra edge-scale shuffle at build time buys k
+    # shuffle-free iterations.
     #
     # AQE must be OFF while the checkpoint is CREATED (restored right
     # after): under AQE the executed plan is an AdaptiveSparkPlan whose
@@ -147,13 +145,11 @@ def pagerank(
     spark_s = df.sparkSession
     shuffle_p = shuffle_partitions(spark_s)
     with scoped_conf(spark_s, spark__sql__adaptive__enabled="false"):
-        edges = edges.repartition(shuffle_p, "dst").localCheckpoint(eager=True)
+        edges = scoped_checkpoint(edges.repartition(shuffle_p, "dst"), eager=True)
     # node-scale: one aggregate over the cached edge blocks (~|nodes|
     # rows), checkpointed so the per-iteration broadcast builds and the
     # node count read tiny stored blocks instead of re-scanning edges
-    deg = (
-        edges.groupBy("src").agg(F.sum("w").alias("__wd")).localCheckpoint(eager=True)
-    )
+    deg = scoped_checkpoint(edges.groupBy("src").agg(F.sum("w").alias("__wd")), eager=True)
     n = deg.count()
     if n == 0:
         return edges.select(F.col("src").alias("node"), F.lit(0.0).alias("pr"))
@@ -206,8 +202,8 @@ def pagerank_sql(
     # the teleport numerator must be the PYTHON-computed double: DuckDB
     # evaluates a bare (1.0 - 0.85) in DECIMAL (-> 0.1499999999999999944)
     # while Spark embeds binary 0.15000000000000002 — a 1-ulp base
-    # divergence feeding every pr (r5 review finding). A string-literal
-    # CAST parses correctly-rounded to the same double everywhere.
+    # divergence feeding every pr. A string-literal CAST parses
+    # correctly-rounded to the same double everywhere.
     omd = f"CAST('{1.0 - d!r}' AS DOUBLE)"
     ctes = [
         (

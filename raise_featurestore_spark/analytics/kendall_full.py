@@ -1,10 +1,10 @@
 """Distributed EXACT Kendall tau-b over the full data — no sample cap.
 
-Closes the r5 "what's missing" item: `analytics/correlation.py` serves
-kendall from a 50k bounded sample (with a documented U-statistic error
-bound), because tau has no single-aggregate closed form. This module
-computes the population tau-b exactly, distributed, in O(n log n)-ish
-work and memory bounded by max(partition, bucket) size:
+`analytics/correlation.py` serves kendall from a 50k bounded sample
+(with a documented U-statistic error bound), because tau has no
+single-aggregate closed form. This module computes the population
+tau-b exactly, distributed, in O(n log n)-ish work and memory bounded by
+max(partition, bucket) size:
 
     tau_b = (n0 − n1 − n2 + n3 − 2·D) / sqrt((n0 − n1)(n0 − n2))
 
@@ -37,7 +37,7 @@ of zero to D.
 Counts are exact int64 inside kernels and DECIMAL(38,0) across the final
 aggregation; the formula itself runs in Python floats on the driver
 (n0 ~ n²/2 exceeds int64 past ~4.3e9 rows — the decimal path keeps the
-COUNTED terms exact well past that). CEILING (r6 ADVICE item 4): the
+COUNTED terms exact well past that). CEILING: the
 EMITTED ``concordant_minus_discordant`` column is typed ``long``, and
 |C−D| ≤ n0, so past ~4.3e9 input rows the output COLUMN (not the
 internal counting) can overflow — the driver-hash dtype contract pins
@@ -58,15 +58,17 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from raise_featurestore_spark.functions.conf_scope import scoped_checkpoint
+
 DEFAULT_BUCKETS = 64
 
 
 def _fenwick_inversions(yr: np.ndarray, size: int) -> int:
     """#pairs (i < j) with yr[i] > yr[j], ranks in [1, size].
 
-    Reference kernel ONLY (per-row interpreted Python — r6 VERDICT "what's
-    wrong" #2 measured it as the hot-loop bottleneck at 1M rows): kept for
-    the differential test pinning :func:`_local_inv` against it."""
+    Reference kernel ONLY (per-row interpreted Python, the hot-loop
+    bottleneck at 1M rows): kept for the differential test pinning
+    :func:`_local_inv` against it."""
     tree = np.zeros(size + 1, dtype=np.int64)
     inv = 0
     seen = 0
@@ -153,13 +155,11 @@ def kendall_tau_full(
     )
 
     # ----- ONE pass over the data builds the (x, y, count) cell frame;
-    # every tie term AND the y-rank bucketing derive from it (r7: the three
-    # separate full-data groupBys were ~30% of 1M-row wall-clock). Pinned
-    # (localCheckpoint) because four downstream jobs read it.
-    cells = (
-        xy.groupBy("__x", "__y")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
+    # every tie term AND the y-rank bucketing derive from it (three
+    # separate full-data groupBys measured ~30% of 1M-row wall-clock).
+    # Checkpointed because four downstream jobs read it.
+    cells = scoped_checkpoint(
+        xy.groupBy("__x", "__y").agg(F.count(F.lit(1)).alias("c")), eager=True
     )
 
     _pairs = (F.col("c").cast("decimal(38,0)") * (F.col("c") - 1) / 2).cast(
@@ -202,7 +202,7 @@ def kendall_tau_full(
     ydist = range_prefix_sums(ycells, "v", {"__cum": "t"}).withColumn(
         "avg_rank", F.col("__cum") - (F.col("t") - F.lit(1)) / F.lit(2.0)
     )
-    # n-adaptive cap (r9): a bucket below ~256 rows is pure task/stage
+    # n-adaptive cap: a bucket below ~256 rows is pure task/stage
     # overhead — at tiny filtered inputs the 64-bucket default cost 1.7×
     # the 8-bucket plan with zero benefit. Bucket count only partitions
     # the exchange; the decomposition is exact at ANY bucket count
@@ -222,7 +222,7 @@ def kendall_tau_full(
                    xy["__y"] == ybuck["v"]).select("__x", "__y", "__yb")
 
     # ----- global (x, y) range sort with partition ids.
-    # localCheckpoint (eager): the decomposition below reads this frame in
+    # eager checkpoint: the decomposition below reads this frame in
     # TWO separate jobs (term 1+2 histograms, term 3 bucket shuffle), and
     # repartitionByRange picks its boundaries by SAMPLING — recomputing it
     # per job can assign the same row different __pid values, silently
@@ -230,11 +230,11 @@ def kendall_tau_full(
     # tau off by ~1e-4 in either direction). Freezing the rows pins one
     # consistent (order, pid, bucket) view for every term.
     p = num_partitions or spark.sparkContext.defaultParallelism
-    srt = (
+    srt = scoped_checkpoint(
         rows.repartitionByRange(p, "__x", "__y")
         .sortWithinPartitions("__x", "__y")
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+        .withColumn("__pid", F.spark_partition_id()),
+        eager=True,
     )
 
     # ----- term 1 + histograms in ONE pass over the sorted partitions
@@ -342,7 +342,7 @@ def kendall_tau_full_sql(
     w = f" WHERE ({where}) AND " if where else " WHERE "
     # NOT ISNAN mirrors the Spark side's na.drop(), which drops NaN rows
     # for double columns — IS NOT NULL alone would keep them here and
-    # diverge n (r6 ADVICE item 3)
+    # diverge n
     w += (
         f"{feature_x} IS NOT NULL AND {feature_y} IS NOT NULL "
         f"AND NOT ISNAN(CAST({feature_x} AS DOUBLE)) "
@@ -380,8 +380,8 @@ def kendall_tau_matrix(
     """EXACT tau-b for every feature pair — the reference's N×N
     Correlation matrix semantics (raise_/analytics/analysis.py:152-195)
     at full-population exactness, amortized over ONE range exchange
-    (r6 VERDICT "next round" item 4: the per-pair kendall_tau_full
-    re-shuffled the frame N(N−1)/2 times).
+    (calling kendall_tau_full per pair would re-shuffle the frame
+    N(N−1)/2 times).
 
     How one range partitioning serves every pair despite each pair
     sorting by a different (x, y): the clean rows are REPLICATED into a
@@ -423,15 +423,15 @@ def kendall_tau_matrix(
 
     # ----- one marginal pass: per-feature value counts feed BOTH the
     # per-feature tie terms and the rank buckets
-    marg = (
+    marg = scoped_checkpoint(
         clean.select(
             F.posexplode(F.array(*[F.col(f"__f{i}") for i in range(k)])).alias(
                 "fi", "v"
             )
         )
         .groupBy("fi", "v")
-        .agg(F.count(F.lit(1)).alias("t"))
-        .localCheckpoint(eager=True)
+        .agg(F.count(F.lit(1)).alias("t")),
+        eager=True,
     )
     _tp = (F.col("t").cast("decimal(38,0)") * (F.col("t") - 1) / 2).cast(
         "decimal(38,0)"
@@ -455,7 +455,7 @@ def kendall_tau_matrix(
     n0 = n * (n - 1) // 2
 
     if n <= small_n:
-        # tiny-n fast path (VERDICT r9 item 5): below the sampled-kendall
+        # tiny-n fast path: below the sampled-kendall
         # guard the distributed bucket grid + range exchange + two term
         # jobs are pure stage overhead (~45-task floors at ~2k rows), so
         # compute every pair's discordant count in ONE single-group
@@ -546,19 +546,19 @@ def kendall_tau_matrix(
     # for why the checkpoint is mandatory). Partition count: capped at
     # parallelism × pairs (per-partition memory keeps the single-pair
     # bound at scale), but sized DOWN to the data via the row count the
-    # marginal pass already collected — r8 perf fix: the fixed cap spent
-    # ~3 s of per-task Python/Arrow overhead on ~200 near-empty pandas
-    # tasks at fixture scale (96 range partitions for 16k replicated
-    # rows); ~100k replicated rows per pandas task is a few MB per frame
-    # and keeps every core busy once the data warrants it.
+    # marginal pass already collected. A fixed cap spends ~3 s of per-task
+    # Python/Arrow overhead on ~200 near-empty pandas tasks at fixture
+    # scale (96 range partitions for 16k replicated rows); ~100k
+    # replicated rows per pandas task is a few MB per frame and keeps
+    # every core busy once the data warrants it.
     cap = (num_partitions or spark.sparkContext.defaultParallelism) * len(pairs)
     need = max(len(pairs), -(-(n * len(pairs)) // 100_000))
     p = num_partitions * len(pairs) if num_partitions else min(cap, need)
-    srt = (
+    srt = scoped_checkpoint(
         rows.repartitionByRange(p, "__pair", "__x", "__y")
         .sortWithinPartitions("__pair", "__x", "__y")
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+        .withColumn("__pid", F.spark_partition_id()),
+        eager=True,
     )
 
     # ----- term 1 + histograms + per-pair joint-tie runs, one pass
@@ -607,8 +607,8 @@ def kendall_tau_matrix(
     # term 3 rides the SAME collect as the partition stats (kind=3 rows
     # unioned in): ONE driver action launches both scans of the
     # checkpointed srt instead of two ThreadPoolExecutor-raced jobs —
-    # fewer driver round-trips (r7 VERDICT item 4) and no concurrent
-    # planning inside anyone's scoped-conf window (ADVICE r7).
+    # fewer driver round-trips and no concurrent planning inside anyone's
+    # scoped-conf window.
     term3 = (
         srt.groupBy("__pair", "__yb")
         .applyInPandas(bucket_inv, "pair int, v long")
@@ -631,7 +631,7 @@ def kendall_tau_matrix(
     d_same: dict[int, int] = {}
     d_local: dict[int, int] = {pi: 0 for pi in range(len(pairs))}
     n3_by: dict[int, int] = {pi: 0 for pi in range(len(pairs))}
-    # ADVICE r7 (low): per-pair DENSE histograms keyed by the pids the
+    # per-pair DENSE histograms keyed by the pids the
     # pair actually occupies — each pair's rows live in a contiguous pid
     # range of the (pair, x, y) range partitioning, so a global
     # (maxpid x b) matrix per pair cost O(pairs^2 * parallelism * b)

@@ -22,10 +22,9 @@ Plan shape per iteration (the canonical distributed Lloyd's):
   Clusters that lose every point keep their previous centroid.
 
 At 100 TB: `iters` corpus scans for the fit plus one for the report; the
-only shuffles are the k-row M-step aggregates. Persist the projected
-(id, vec) frame upstream if the source scan is expensive — the loop
-caches it for its own iterations in a nested ``cache_scope`` that releases
-it before returning.
+only shuffles are the k-row M-step aggregates. The projected (id, vec)
+frame is cached with ``scoped_persist`` for the iterations and the final
+assignment; the caller's ``cache_scope`` releases it after its action.
 
 Oracle: `kmeans_report_sql` / `cluster_balanced_sample_sql` regenerate the
 entire iterative computation as chained CTEs (assignment via a
@@ -42,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from raise_featurestore_spark.functions.conf_scope import cache_scope, scoped_persist
+from raise_featurestore_spark.functions.conf_scope import scoped_persist
 from raise_featurestore_spark.functions.stable import sig_round, sig_round_sql
 
 DEFAULT_K = 8
@@ -104,35 +103,34 @@ def kmeans_fit(
         ).where(F.lit(False))
     cents = {i: list(r.v) for i, r in enumerate(init)}
     dim = len(init[0].v)
-    with cache_scope():
-        pts = scoped_persist(pts)
-        for _ in range(iters - 1):
-            assigned = _assign(pts, cents)
-            # M-step as ONE posexplode + (cluster, dim) aggregate, not dim
-            # separate avg(v[d]) aggregates: the expanded form re-entered
-            # Catalyst analysis + codegen with a fresh ~dim-wide aggregate
-            # plan EVERY iteration (new centroid literals ⇒ new plan) —
-            # 2-5 s of driver time per M-step at dim=64 vs milliseconds of
-            # actual execution (2k rows). The exploded row stream partial-
-            # aggregates map-side before the k×dim-row shuffle, so the
-            # scale posture is unchanged; sig_round (applied engine-side
-            # over the k×dim grouped result, as before) absorbs the
-            # summation-order ulp between the two physical forms.
-            upd = (
-                assigned.select(
-                    "cluster", F.posexplode(F.col("v")).alias("d", "x")
-                )
-                .groupBy("cluster", "d")
-                .agg(F.avg("x").alias("m"))
-                .select("cluster", "d", sig_round(F.col("m")).alias("m"))
-                .collect()
+    pts = scoped_persist(pts)
+    for _ in range(iters - 1):
+        assigned = _assign(pts, cents)
+        # M-step as ONE posexplode + (cluster, dim) aggregate, not dim
+        # separate avg(v[d]) aggregates: the expanded form re-entered
+        # Catalyst analysis + codegen with a fresh ~dim-wide aggregate
+        # plan EVERY iteration (new centroid literals ⇒ new plan) —
+        # 2-5 s of driver time per M-step at dim=64 vs milliseconds of
+        # actual execution (2k rows). The exploded row stream partial-
+        # aggregates map-side before the k×dim-row shuffle, so the
+        # scale posture is unchanged; sig_round (applied engine-side
+        # over the k×dim grouped result, as before) absorbs the
+        # summation-order ulp between the two physical forms.
+        upd = (
+            assigned.select(
+                "cluster", F.posexplode(F.col("v")).alias("d", "x")
             )
-            new_cents: dict[int, list[float]] = {}
-            for r in upd:
-                new_cents.setdefault(r.cluster, [0.0] * dim)[r.d] = r.m
-            for cid, vec in new_cents.items():
-                cents[cid] = vec
-        return _assign(pts, cents)
+            .groupBy("cluster", "d")
+            .agg(F.avg("x").alias("m"))
+            .select("cluster", "d", sig_round(F.col("m")).alias("m"))
+            .collect()
+        )
+        new_cents: dict[int, list[float]] = {}
+        for r in upd:
+            new_cents.setdefault(r.cluster, [0.0] * dim)[r.d] = r.m
+        for cid, vec in new_cents.items():
+            cents[cid] = vec
+    return _assign(pts, cents)
 
 
 def kmeans_report(

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from raise_featurestore_spark.functions.conf_scope import scoped_checkpoint
+
 # rounds the last connected_components call ran before reaching the
 # star-forest fixpoint — read by scripts/scale_rehearsal.py to verify the
 # O(log n) contract holds as data grows (process-local diagnostics only)
@@ -47,11 +49,11 @@ def _half_round(edges: DataFrame, large: bool, dedup: bool = True) -> DataFrame:
 
     Input/output edges are oriented (u, v) with v < u except for the raw
     first input, which may be arbitrary. Output is deduplicated when
-    ``dedup`` — the large-star half passes ``dedup=False`` (r11-opt):
-    duplicate edges do not change the small-star half's min aggregates or
-    its output SET, and the round-final distinct dedups anyway, so the
-    intermediate distinct was one whole exchange of the edge frame per
-    round for nothing.
+    ``dedup`` — the large-star half passes ``dedup=False``: duplicate
+    edges do not change the small-star half's min aggregates or its
+    output SET, and the round-final distinct dedups anyway, so an
+    intermediate distinct would be one whole exchange of the edge frame
+    per round for nothing.
     """
     if large:
         sym = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -90,18 +92,18 @@ def connected_components(
     needed). ``cluster`` doubles as the keeper id: it IS the min doc id of
     the component.
     """
-    e = (
+    e = scoped_checkpoint(
         edges.select(
             F.greatest(F.col(src), F.col(dst)).alias("u"),
             F.least(F.col(src), F.col(dst)).alias("v"),
         )
         .where(F.col("u") != F.col("v"))
-        .distinct()
+        .distinct(),
         # lazy like the per-round checkpoints: the first convergence check
         # materializes the (expensive) pair generation as part of its own
         # job; the aggregate computes every partition, so the checkpoint
         # completes in that same job.
-        .localCheckpoint(eager=False)
+        eager=False,
     )
     # nodes AFTER the checkpoint: the pair generator upstream (minhash,
     # shingling, ...) is the expensive part and must run exactly once.
@@ -144,12 +146,12 @@ def connected_components(
         if i == max_iter:
             raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
         e = _half_round(_half_round(e, large=True, dedup=False), large=False)
-        # LAZY checkpoint (r11-opt): the next loop iteration's convergence
-        # check is the first action on e and materializes the checkpoint as
-        # part of its own job — eager=True paid a separate materialization
-        # job per round (two driver-blocking jobs per round instead of one)
+        # LAZY checkpoint: the next loop iteration's convergence check is
+        # the first action on e and materializes the checkpoint as part of
+        # its own job, so each round is one driver-blocking job; an eager
+        # checkpoint would add a separate materialization job per round
         # for the same lineage truncation.
-        e = e.localCheckpoint(eager=False)
+        e = scoped_checkpoint(e, eager=False)
     labels = e.groupBy("u").agg(F.min("v").alias("cluster"))
     return (
         nodes.join(labels, "u", "left")

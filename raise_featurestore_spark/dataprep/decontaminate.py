@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from raise_featurestore_spark.dataprep import hashing as H
+from raise_featurestore_spark.functions.conf_scope import scoped_checkpoint
 
 DEFAULT_DECON_N = 8  # word n-gram size
 
@@ -85,7 +86,7 @@ def decontaminate(
     corpus bigger than ``max_broadcast_grams`` distinct grams would blow
     the broadcast/driver budget, so the join degrades to a shuffled hash
     join instead (``hint("shuffle_hash")`` — no sort, grams shuffle once).
-    The guard counts the persisted gram set, a benchmark-side-only job; at
+    The guard counts the checkpointed gram set, a benchmark-side-only job; at
     100 TB the gram set is a materialized table and the count comes from
     table stats instead. ``max_broadcast_grams=None`` skips the guard and
     always broadcasts.
@@ -93,11 +94,9 @@ def decontaminate(
     bench = word_ngram_hashes(benchmark_df, id_col, text_col, n).select("gh").distinct()
     use_broadcast = True
     if max_broadcast_grams is not None:
-        # localCheckpoint, not persist(): the pinned gram set is reclaimed
-        # by the ContextCleaner once the result is dropped, so repeated
-        # decontaminate() calls (per benchmark suite / corpus shard) don't
-        # accumulate dead cache entries for the session's lifetime
-        bench = bench.localCheckpoint(eager=False)
+        # checkpointed so the guard's count and the join read one
+        # materialized gram set
+        bench = scoped_checkpoint(bench, eager=False)
         use_broadcast = bench.count() <= max_broadcast_grams
     corpus = word_ngram_hashes(corpus_df, id_col, text_col, n)
     bench_side = F.broadcast(bench) if use_broadcast else bench.hint("shuffle_hash")

@@ -85,11 +85,6 @@ def _tfidf_ctes(table: str, id_col: str, text_col: str) -> str:
     )
 
 
-def tfidf_terms_sql(table: str, id_col: str = "doc_id", text_col: str = "text") -> str:
-    ctes = _tfidf_ctes(table, id_col, text_col)
-    return f"WITH {ctes} SELECT id AS {id_col}, term, tf, df, tfidf FROM scored"
-
-
 def top_keywords_sql(
     table: str,
     id_col: str = "doc_id",

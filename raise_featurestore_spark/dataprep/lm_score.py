@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from raise_featurestore_spark.dataprep.text import _tokens, _tokens_sql
+from raise_featurestore_spark.functions.conf_scope import scoped_checkpoint
 from raise_featurestore_spark.functions.stable import sig_round, sig_round_sql
 
 DEFAULT_VOCAB = 512
@@ -65,7 +66,7 @@ def fit_bigram_lm(
     """TRAIN-ONCE: the add-k bigram LM as ONE persistable reference table
     (write it with ``df.write.parquet`` / ``io/cache.cached_table`` and
     score any corpus against it forever after — the operator a 100 TB
-    pipeline actually runs; r8 VERDICT "what's missing" #4).
+    pipeline actually runs).
 
     Row encoding: ``prev IS NULL`` rows are the vocabulary (tok, cnt =
     corpus unigram count); ``prev IS NOT NULL`` rows are bigram counts
@@ -79,7 +80,7 @@ def fit_bigram_lm(
     # (vocab rows + the broadcast map side of the bigram pass) — without
     # pinning it, the union recomputes the full tokenize+count scan per
     # branch (measured 13.5 s vs 6 s at sf0.1)
-    vocab = uni.orderBy(F.col("cnt").desc(), "tok").limit(vocab_size).localCheckpoint()
+    vocab = scoped_checkpoint(uni.orderBy(F.col("cnt").desc(), "tok").limit(vocab_size))
     bigrams = _vocab_bigrams(tokpos, vocab.select("tok"))
     model = bigrams.groupBy("prev", "tok").agg(F.count(F.lit(1)).alias("cnt"))
     vrows = vocab.select(
@@ -116,9 +117,8 @@ def score_with_bigram_lm(
     """SCORE-MANY: per-document perplexity of ``df`` under a PRE-BUILT
     :func:`fit_bigram_lm` table. No fit joins — the model side is
     vocabulary-bounded and BROADCAST, so the only corpus-scale shuffles
-    are the per-document token window and the final groupBy(doc): the
-    named fix for the 9–11× fit-join residue on text_lm_perplexity /
-    text_ppl_buckets (r8 VERDICT perf-weak #2/#3).
+    are the per-document token window and the final groupBy(doc); fit
+    joins cost text_lm_perplexity / text_ppl_buckets 9–11×.
 
     Unseen (prev, tok) bigrams take the add-k floor (cb=0); a prev never
     seen as a context takes cc=0 — standard add-k semantics, and exactly

@@ -174,25 +174,3 @@ def asof_join(
     if matched_ts_col is not None:
         cols.append(F.col("__matched_ts").alias(matched_ts_col))
     return out.select(*cols)
-
-
-def asof_join_sql(
-    spine_sql: str,
-    features_sql: str,
-    on: str | list[str],
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    select: str = "s.*, f.* EXCLUDE ({keys}, {right_ts})",
-    direction: str = "backward",
-) -> str:
-    """DuckDB oracle twin: native ``ASOF LEFT JOIN`` (same inclusive-tie
-    semantics as the union-window plan). ``select`` is a template over
-    aliases ``s`` (spine) and ``f`` (features)."""
-    keys = [on] if isinstance(on, str) else list(on)
-    eq = " AND ".join(f"s.{k} = f.{k}" for k in keys)
-    cmp = ">=" if direction == "backward" else "<="
-    sel = select.format(keys=", ".join(keys), right_ts=right_ts)
-    return (
-        f"SELECT {sel} FROM ({spine_sql}) s "
-        f"ASOF LEFT JOIN ({features_sql}) f ON {eq} AND s.{left_ts} {cmp} f.{right_ts}"
-    )

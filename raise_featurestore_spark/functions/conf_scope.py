@@ -23,8 +23,10 @@ accept that; fully isolating would need a dedicated SparkSession per
 override, which classic PySpark cannot retrofit onto an existing
 DataFrame's plan.
 
-Executor caches: engine code caches only through ``scoped_persist``; code
-that runs a plan to completion opens ``cache_scope()``, so no cache
+Executor caches: engine code materializes only through ``scoped_persist``
+and ``scoped_checkpoint``; code that runs a plan to completion opens
+``cache_scope()``, which releases both the CacheManager entries and the
+checkpoint RDD blocks after the caller's action, so no executor-side copy
 outlives the query that built it.
 """
 
@@ -33,7 +35,7 @@ from __future__ import annotations
 import threading
 from contextlib import contextmanager
 from contextvars import ContextVar
-from typing import Iterator
+from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -83,24 +85,35 @@ def shuffle_partitions(spark: SparkSession, default: int | None = None) -> int:
         return spark.sparkContext.defaultParallelism
 
 
-# frames cached inside the innermost open cache_scope() of this context
-# (None: no scope); per context, so concurrent threads own separate scopes
-_CACHE_SCOPE: ContextVar[list[DataFrame] | None] = ContextVar("cache_scope", default=None)
+# release callbacks for the frames materialized inside the innermost open
+# cache_scope() of this context (None: no scope); per context, so
+# concurrent threads own separate scopes
+_CACHE_SCOPE: ContextVar[list[Callable[[], object]] | None] = ContextVar(
+    "cache_scope", default=None
+)
 
 
 @contextmanager
 def cache_scope() -> Iterator[None]:
-    """Unpersist, when the block exits, every frame that
-    :func:`scoped_persist` cached inside it. A nested scope releases only
-    its own frames; the enclosing scope's stay cached until it exits."""
-    frames: list[DataFrame] = []
-    token = _CACHE_SCOPE.set(frames)
+    """Release, when the block exits, every frame that
+    :func:`scoped_persist` or :func:`scoped_checkpoint` materialized
+    inside it. A nested scope releases only its own frames; the enclosing
+    scope's stay materialized until it exits. Run the action that reads
+    them inside the block: a released checkpoint cannot be read again."""
+    releases: list[Callable[[], object]] = []
+    token = _CACHE_SCOPE.set(releases)
     try:
         yield
     finally:
         _CACHE_SCOPE.reset(token)
-        for df in frames:
-            df.unpersist()
+        for release in releases:
+            release()
+
+
+def _register(release: Callable[[], object]) -> None:
+    releases = _CACHE_SCOPE.get()
+    if releases is not None:
+        releases.append(release)
 
 
 def scoped_persist(df: DataFrame) -> DataFrame:
@@ -109,7 +122,15 @@ def scoped_persist(df: DataFrame) -> DataFrame:
     ``persist()``: the cache lives until the caller unpersists it or
     clears the session's cache."""
     df = df.persist()
-    frames = _CACHE_SCOPE.get()
-    if frames is not None:
-        frames.append(df)
+    _register(df.unpersist)
+    return df
+
+
+def scoped_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``df.localCheckpoint(eager)``, whose RDD blocks are released when
+    the innermost open :func:`cache_scope` exits. With no scope open it
+    is a plain ``localCheckpoint``: the blocks live until the driver
+    drops the RDD and its ContextCleaner runs."""
+    df = df.localCheckpoint(eager)
+    _register(lambda: df._jdf.queryExecution().analyzed().rdd().unpersist(False))
     return df

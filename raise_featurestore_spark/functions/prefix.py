@@ -19,7 +19,7 @@ same inclusive running totals with the classic distributed scan:
 
 Total cost: one range shuffle + one broadcast join + one transient
 materialization of the shuffled frame; no single-task sort of the full
-relation. The materialization (``localCheckpoint``) is NOT an
+relation. The materialization (``scoped_checkpoint``) is NOT an
 optimization: the local-sums and totals branches MUST observe the same
 range boundaries, and without pinning one physical instance the optimizer
 can plant two independent range exchanges whose per-RDD-seeded boundary
@@ -35,6 +35,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from raise_featurestore_spark.functions.conf_scope import scoped_checkpoint
 
 
 def grouped_range_prefix_sums(
@@ -65,15 +67,12 @@ def grouped_range_prefix_sums(
     # partition i's local sums to partition i's total under a DIFFERENT
     # boundary — silently wrong running totals (observed: ~25k of 26k
     # cums wrong on a 50k-row corpus; invisible at small scale where the
-    # bound sample is exhaustive). localCheckpoint pins ONE physical RDD
-    # instance both branches read; unlike persist(), its storage is
-    # reclaimed by the ContextCleaner once the result is unreferenced
-    # (persist would pin a copy in the CacheManager for the whole session
-    # per call — a leak for a primitive this widely reused). Trade: a
-    # lost executor cannot recompute truncated lineage and fails the job
-    # (same posture as components.py's iterative checkpoints); storage is
-    # one transient MEMORY_AND_DISK copy on top of the shuffle.
-    part = part.localCheckpoint(eager=False)
+    # bound sample is exhaustive). The checkpoint pins ONE physical RDD
+    # instance both branches read. Trade: a lost executor cannot
+    # recompute truncated lineage and fails the job (same posture as
+    # components.py's iterative checkpoints); storage is one transient
+    # MEMORY_AND_DISK copy on top of the shuffle.
+    part = scoped_checkpoint(part, eager=False)
     w_local = (
         Window.partitionBy(*group_cols, "__pid")
         .orderBy(order_col)
@@ -139,7 +138,7 @@ def grouped_range_avg_ranks(
     # same two-branch boundary pin as grouped_range_prefix_sums (see the
     # CORRECTNESS comment there): local windows and totals must observe
     # ONE physical range partitioning
-    part = part.localCheckpoint(eager=False)
+    part = scoped_checkpoint(part, eager=False)
     w_cum = (
         Window.partitionBy(*group_cols, "__pid")
         .orderBy(order_col)

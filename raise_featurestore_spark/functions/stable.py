@@ -326,18 +326,6 @@ def poisoned(core: Column, poison: Column) -> Column:
     return F.when(F.isnan(poison), poison).otherwise(core + poison)
 
 
-def dec_term_sql(expr: str, grid_decimals: int = 4) -> str:
-    """DuckDB twin of :func:`dec_term` (DECIMAL(19, g) forces int128
-    products/sums — DuckDB keeps 18-digit arithmetic in int64, which
-    overflows on squares; Spark would precision-loss-rescale 19-digit
-    squares instead, so each engine gets the widest EXACT form)."""
-    bad = _dec_bad_sql(expr, grid_decimals)
-    return (
-        f"CASE WHEN NOT ({bad}) "
-        f"THEN CAST({grid_snap_sql(expr, grid_decimals)} AS DECIMAL(19,{grid_decimals})) END"
-    )
-
-
 def _dec_bad_sql(expr: str, grid_decimals: int) -> str:
     return f"(ISNAN({expr}) OR ABS({expr}) >= {dec_domain_limit(grid_decimals)!r})"
 

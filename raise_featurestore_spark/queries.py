@@ -15,6 +15,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from raise_featurestore_spark.functions import stable as STABLE
+from raise_featurestore_spark.functions.conf_scope import scoped_checkpoint
 
 from raise_featurestore_spark.analytics.aggregation import (
     aggregation_to_sql,
@@ -985,11 +986,11 @@ def _ann_ivf_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     (observed min ≥ 0.5 across sf0.001/0.01/0.1; queries drawn from the
     corpus always recall themselves, so 0.1 is the hard floor)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    qs = (
+    # 8 rows, consumed by BOTH the ivf and exact branches
+    qs = scoped_checkpoint(
         emb.orderBy("vec_id")
         .limit(_BATCH_NQ)
         .select(F.col("vec_id").alias("query_id"), "embedding")
-        .localCheckpoint()  # 8 rows, consumed by BOTH the ivf and exact branches
     )
     cents, assigned = _ivf_index_cached(spark, sf_dir)
     ivf = SIM.ivf_batch_topk(assigned, qs, cents, k=10, nprobe=3, assigned=True).select(
@@ -2246,12 +2247,12 @@ def _upsert_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         write_feature_group(initial, path, mode="overwrite")
         write_feature_group(updates, path, mode="upsert", key_columns=["o_orderkey"])
-        # localCheckpoint (eager) detaches the plan from the temp files so
+        # the eager checkpoint detaches the plan from the temp files so
         # they can be removed before the driver collects the result
-        return (
-            spark.read.parquet(path)
-            .select("o_orderkey", STABLE.grid_snap(F.col("o_totalprice"), 4).alias("o_totalprice"))
-            .localCheckpoint()
+        return scoped_checkpoint(
+            spark.read.parquet(path).select(
+                "o_orderkey", STABLE.grid_snap(F.col("o_totalprice"), 4).alias("o_totalprice")
+            )
         )
     finally:
         shutil.rmtree(path, ignore_errors=True)
@@ -2466,11 +2467,10 @@ def _objectstorage_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
             path=path, format="csv",
             options={"header": "true", "inferSchema": "true"},
         )
-        return (
+        return scoped_checkpoint(
             src.read(spark)
             .groupBy(F.col("n_regionkey").cast("bigint").alias("n_regionkey"))
             .agg(F.count(F.lit(1)).alias("nations"))
-            .localCheckpoint()
         )
     finally:
         shutil.rmtree(path, ignore_errors=True)
@@ -2502,14 +2502,12 @@ def _filesystem_jsonl_glob(spark: SparkSession, sf_dir: str) -> DataFrame:
         src = FileSystemSource(
             path=path, format="jsonl", glob="part-*.json", schema=region.schema
         )
-        return (
-            src.read(spark)
-            .select(
+        return scoped_checkpoint(
+            src.read(spark).select(
                 F.col("r_regionkey").cast("bigint").alias("r_regionkey"),
                 "r_name",
                 F.length("r_name").cast("bigint").alias("name_len"),
             )
-            .localCheckpoint()
         )
     finally:
         shutil.rmtree(path, ignore_errors=True)

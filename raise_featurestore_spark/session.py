@@ -53,14 +53,5 @@ def get_spark(app_name: str = "raise-featurestore-spark", cpus: int | None = Non
         # is split into sub-methods by Spark, so large stages stay
         # JIT-able.
         .config("spark.sql.codegen.maxFields", "1000")
-        # The prefix/rank kernels pin range boundaries with LAZY
-        # localCheckpoints; their block storage is reclaimed by the
-        # ContextCleaner only after a DRIVER GC drops the RDD reference,
-        # and py4j holds Python-side refs long after the query returns.
-        # The default periodic-GC interval (30 min) lets a long session
-        # (the 144-query gate, bench) accumulate GBs of dead checkpoint
-        # blocks; 2 min keeps steady-state storage bounded at a few
-        # spare System.gc() calls per session.
-        .config("spark.cleaner.periodicGC.interval", "2min")
     )
     return builder.getOrCreate()

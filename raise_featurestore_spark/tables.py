@@ -2,8 +2,7 @@
 
 The driver generates TPC-H-ish parquet at ``/root/testdata/sf*/``:
 ``region nation customer supplier part orders lineitem events documents
-embeddings``. We read each as a DataFrame and (optionally) register temp
-views so SQL transforms can reference them by name.
+embeddings``. We read each as a DataFrame.
 
 At 100 TB these would be partitioned/clustered warehouse tables; reading
 parquet directly keeps Catalyst's parquet scan (predicate pushdown, column
@@ -16,19 +15,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-TABLE_NAMES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -82,18 +68,3 @@ def fan_out_if_undersplit(df: DataFrame) -> DataFrame:
     if files and len(files) < slots:
         return df.repartition(slots)
     return df
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, register_views: bool = False
-) -> dict[str, DataFrame]:
-    out: dict[str, DataFrame] = {}
-    for name in TABLE_NAMES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if not os.path.exists(path):
-            continue
-        df = load_table(spark, sf_dir, name)
-        out[name] = df
-        if register_views:
-            df.createOrReplaceTempView(name)
-    return out

@@ -1,19 +1,40 @@
-"""Executor-cache ownership: ``scoped_persist`` registers a frame with the
-innermost open ``cache_scope()``, which unpersists it when the block
-exits. The checks read the session's CacheManager, not
-``getPersistentRDDs()``: lazy ``localCheckpoint`` RDDs elsewhere in the
-engine show up there too, until a driver GC reclaims them."""
+"""Executor-materialization ownership: ``scoped_persist`` and
+``scoped_checkpoint`` register a frame with the innermost open
+``cache_scope()``, which releases it when the block exits. A scoped query
+leaves both the session's CacheManager and ``getPersistentRDDs()`` (which
+also lists local-checkpoint RDDs) where they were before it ran."""
 
 from __future__ import annotations
 
+import ast
+import glob
 import os
 
 import pytest
 from pyspark import StorageLevel
 
-from raise_featurestore_spark.functions.conf_scope import cache_scope, scoped_persist
+import raise_featurestore_spark
+from raise_featurestore_spark.functions.conf_scope import (
+    cache_scope,
+    scoped_checkpoint,
+    scoped_persist,
+)
 
 from tests.conftest import SF_DIR
+from tests.test_empty_input import SMOKE_QUERIES
+
+# the iterative and checkpointing kernels, beside one query per package
+LEAK_QUERIES = SMOKE_QUERIES + (
+    "dedup_clusters",
+    "graph_pagerank_coparts",
+    "corr_kendall_full",
+    "stattest_ks",
+    "decontaminate_benchmark",
+    "text_lm_perplexity",
+    "ann_ivf_batch_topk",
+    "job_upsert_merge",
+    "cluster_kmeans_report",
+)
 
 
 def _cache_empty(spark) -> bool:
@@ -22,6 +43,10 @@ def _cache_empty(spark) -> bool:
 
 def _cached(df) -> bool:
     return df.storageLevel != StorageLevel.NONE
+
+
+def _persistent_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
 @pytest.fixture()
@@ -82,3 +107,69 @@ def test_analyze_spearman_leaves_no_cache(clean):
     res = AnalyticsClient().analyze(orders, spec)
     assert res.row_count == 6  # 3 diagonal cells + C(3, 2) pairs
     assert _cache_empty(spark)
+
+
+def test_scope_releases_checkpoints_after_the_action(clean):
+    spark = clean
+    before = _persistent_rdds(spark)
+    for eager in (True, False):
+        with cache_scope():
+            df = scoped_checkpoint(spark.range(100).selectExpr("id * 2 AS x"), eager)
+            assert df.count() == 100
+            assert _persistent_rdds(spark) - before
+        assert _persistent_rdds(spark) == before
+
+
+@pytest.mark.parametrize("name", LEAK_QUERIES)
+def test_scoped_query_leaves_no_materialization(clean, name):
+    import __spark_entry__ as em
+
+    spark = clean
+    before = _persistent_rdds(spark)
+    with cache_scope():
+        em.queries()[name](spark, SF_DIR).toPandas()
+    assert _persistent_rdds(spark) == before
+    assert _cache_empty(spark)
+
+
+def _leaves(plan) -> list:
+    """Leaf nodes of a physical plan, looking through adaptive execution."""
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.inputPlan()
+    leaves = plan.collectLeaves()
+    return [leaves.apply(i) for i in range(leaves.size())]
+
+
+def test_kmeans_final_assignment_reads_the_cache(clean):
+    import __spark_entry__ as em
+
+    spark = clean
+    with cache_scope():
+        df = em.queries()["cluster_kmeans_report"](spark, SF_DIR)
+        (scan,) = _leaves(df._jdf.queryExecution().executedPlan())
+        assert scan.nodeName() == "InMemoryTableScan"
+        cached = [leaf.nodeName().strip() for leaf in _leaves(scan.relation().cachedPlan())]
+        assert cached == ["Scan parquet"]
+        df.toPandas()
+    assert _cache_empty(spark)
+
+
+def test_engine_materializes_only_through_conf_scope():
+    """``.persist(`` and ``.localCheckpoint(`` calls live only in the two
+    scoped helpers, and ``.cache(`` / ``.checkpoint(`` nowhere, so every
+    executor-side copy has an owning scope."""
+    root = os.path.dirname(raise_featurestore_spark.__file__)
+    offenders = []
+    for path in glob.glob(os.path.join(root, "**", "*.py"), recursive=True):
+        if path.endswith(os.path.join("functions", "conf_scope.py")):
+            continue
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        offenders += [
+            f"{os.path.relpath(path, root)}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("persist", "cache", "localCheckpoint", "checkpoint")
+        ]
+    assert not offenders, offenders

@@ -5,8 +5,7 @@ This is the sibling of test_empty_input.py for the zero-VARIANCE class:
 Spark 4 runs ANSI mode by default, where ANY division whose divisor
 evaluates to zero is a hard job failure — not just integer division.
 Zero-variance slices hit exactly those divisors: Corr's final division
-(the r10 constant-feature crash, fixed via the bounds guard in
-analytics/correlation.py), z-score stddev denominators, rate/ratio
+(guarded by the bounds check in analytics/correlation.py), z-score stddev denominators, rate/ratio
 denominators over single-class data. A 100 TB pipeline meets this shape
 whenever a slice filter lands on a single day / single status / single
 vendor; operators must degrade (NULL / empty / one bucket), never fail
@@ -23,6 +22,7 @@ import os
 
 import pytest
 
+from raise_featurestore_spark.functions.conf_scope import cache_scope
 from tests.test_empty_input import EXPECTED_GUARDS, SWEEPS, swept_queries
 
 
@@ -64,7 +64,8 @@ def test_every_query_survives_constant_tables(spark, degen_sf_dir, names):
     failures = []
     for name, fn in swept_queries(names):
         try:
-            fn(spark, degen_sf_dir).count()
+            with cache_scope():
+                fn(spark, degen_sf_dir).count()
         except Exception as ex:  # noqa: BLE001 - classifying failure modes
             # the empty-input guards are count-based, so constant (but
             # populated) tables satisfy them; only documented guards pass

@@ -12,6 +12,8 @@ import os
 
 import pytest
 
+from raise_featurestore_spark.functions.conf_scope import cache_scope
+
 # queries that REQUIRE non-empty input by documented design; each raises an
 # explicit, typed error (not an engine fault)
 EXPECTED_GUARDS = {
@@ -74,7 +76,8 @@ def test_every_query_survives_empty_tables(spark, empty_sf_dir, names):
     failures = []
     for name, fn in swept_queries(names):
         try:
-            fn(spark, empty_sf_dir).count()
+            with cache_scope():
+                fn(spark, empty_sf_dir).count()
             if name in EXPECTED_GUARDS:
                 failures.append(f"{name}: expected {EXPECTED_GUARDS[name].__name__}, ran clean")
         except Exception as ex:  # noqa: BLE001 - classifying failure modes

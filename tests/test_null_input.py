@@ -3,8 +3,8 @@ NULL.
 
 Third shape in the degenerate-input family (empty rows / constant
 values / NULL values). Distinct failure class: NULL reaches driver-side
-collects (a NULL embedding was a raw ``list(None)`` TypeError in the
-k-means sampler before r10) and Arrow-batched pandas UDFs (``.str.len()
+collects (a NULL embedding must not reach a raw ``list(None)`` in the
+k-means sampler) and Arrow-batched pandas UDFs (``.str.len()
 .astype("int64")`` cannot hold NaN). Operators must degrade to
 NULL/empty results or raise their DOCUMENTED guards — never an
 engine/worker error. Keys stay real so joins and groupings still key.
@@ -17,6 +17,7 @@ import os
 
 import pytest
 
+from raise_featurestore_spark.functions.conf_scope import cache_scope
 from tests.test_empty_input import EXPECTED_GUARDS, SWEEPS, swept_queries
 
 
@@ -49,7 +50,8 @@ def test_every_query_survives_all_null_values(spark, null_sf_dir, names):
     failures = []
     for name, fn in swept_queries(names):
         try:
-            fn(spark, null_sf_dir).count()
+            with cache_scope():
+                fn(spark, null_sf_dir).count()
         except Exception as ex:  # noqa: BLE001 - classifying failure modes
             if not isinstance(ex, EXPECTED_GUARDS.get(name, ())):
                 failures.append(

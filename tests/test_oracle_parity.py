@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import pytest
 
+from raise_featurestore_spark.functions.conf_scope import cache_scope
 from tests.conftest import SF_DIR, assert_frames_match
 
 import __spark_entry__ as entrymod
@@ -21,14 +22,15 @@ def _cases():
 
 @pytest.mark.parametrize("name,fn,sql", _cases(), ids=[c[0] for c in _cases()])
 def test_query_matches_oracle(spark, ddb, name, fn, sql):
-    df = fn(spark, SF_DIR)
-    if sql is None:
-        # weaker rows-only check for non-SQL-expressible ops
-        assert df.count() >= 0
-        return
-    con = ddb(SF_DIR)
-    want = con.sql(sql).df()
-    assert_frames_match(df, want)
+    with cache_scope():
+        df = fn(spark, SF_DIR)
+        if sql is None:
+            # weaker rows-only check for non-SQL-expressible ops
+            assert df.count() >= 0
+            return
+        con = ddb(SF_DIR)
+        want = con.sql(sql).df()
+        assert_frames_match(df, want)
 
 
 def test_entry_smoke(spark):
