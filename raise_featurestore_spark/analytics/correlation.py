@@ -15,13 +15,14 @@ Scale design:
   ``sample_size`` (reference analysis.py:176) remains available to bound
   cost further. Tie handling is the standard average-rank
   ``rank + (ties-1)/2``.
-- **kendall** (tau-b) has no distributed closed form; THIS module runs it
-  on a bounded sample via ``applyInPandas`` (Knight O(n log n) kernel) —
-  the sample is the TakeOrdered prefix of a salted content hash, a uniform
+- **kendall** (tau-b) has no single-aggregate closed form. Both routes
+  run ``analytics/kendall_full.py``: ``exact=True`` is the distributed
+  :func:`kendall_tau_matrix` over every row, and the default runs its
+  single-task kernel (:func:`kendall_tau_single_task`) on a bounded
+  sample — the TakeOrdered prefix of a salted content hash, a uniform
   pseudo-random draw, so the estimate carries the U-statistic error bound
-  below. For the EXACT full-data tau (no cap), use
-  ``analytics/kendall_full.kendall_tau_full`` — a distributed 3-term
-  inversion decomposition, bit-equal to this kernel.
+  below. ``_tau_b`` here is the Fenwick reference kernel both are tested
+  against.
 
 Sampled-kendall error bound (vs the full-data population tau): tau-b over
 a uniform random sample of size m is a two-sample U-statistic with kernel
@@ -52,8 +53,8 @@ DEFAULT_ROUND = 4
 # grid-snapped approximation, not exact row ranks — spec callers written
 # against exact spearman see the difference only through this notice
 _SPEARMAN_DEFAULT_NOTICED = False
-# guard for the single-task kendall kernel; Knight's O(n log n) keeps even
-# this cap at ~0.3 s (the old O(n²) kernel required 5k)
+# row cap for the single-task kendall kernel (O(n log n) per pair, ~0.3 s
+# at the cap)
 KENDALL_MAX_SAMPLE = 50_000
 
 
@@ -189,24 +190,31 @@ def compile_correlation(
     feats = spec.features
 
     if spec.method == "kendall":
-        if spec.exact:
-            # full-population tau-b matrix, no sample cap: the distributed
-            # 3-term inversion decomposition, every pair over ONE range
-            # exchange (analytics/kendall_full.py). Diagonal rows appended
-            # to match this compiler's (feature_a, feature_b, corr) shape.
-            from raise_featurestore_spark.analytics.kendall_full import (
-                kendall_tau_matrix,
-            )
+        # exact: the full-population matrix (analytics/kendall_full.py);
+        # sampled: its lazy single-task kernel over at most
+        # KENDALL_MAX_SAMPLE rows, with the U-statistic bound of the module
+        # docstring. Diagonal rows appended to match this compiler's
+        # (feature_a, feature_b, corr) shape.
+        from raise_featurestore_spark.analytics.kendall_full import (
+            kendall_tau_matrix,
+            kendall_tau_single_task,
+        )
 
-            m = kendall_tau_matrix(df, feats, round_to=round_to).select(
-                "feature_a", "feature_b", "corr"
+        if spec.exact:
+            m = kendall_tau_matrix(df, feats, round_to=round_to)
+        else:
+            m = kendall_tau_single_task(
+                df.limit(KENDALL_MAX_SAMPLE), feats, round_to=round_to
             )
-            diag = df.sparkSession.createDataFrame(
-                [(f, f, 1.0) for f in feats],
-                "feature_a string, feature_b string, corr double",
-            )
-            return diag.unionByName(m)
-        return _kendall(df, feats, round_to)
+        # diagonal from a one-partition range: a createDataFrame diagonal
+        # scans a defaultParallelism-partition RDD (~0.15 s per query)
+        ones = [
+            F.struct(F.lit(f).alias("feature_a"), F.lit(f).alias("feature_b"),
+                     F.lit(1.0).alias("corr"))
+            for f in feats
+        ]
+        diag = df.sparkSession.range(1, numPartitions=1).select(F.inline(F.array(*ones)))
+        return diag.unionByName(m.select("feature_a", "feature_b", "corr"))
 
     if spec.method == "spearman":
         if not spec.exact:
@@ -394,12 +402,11 @@ def correlation_to_sql(
 
 
 def _tau_b(x, y) -> float:
-    """Kendall tau-b in O(n log n) (Knight's algorithm): sort by (x, y),
-    count discordant pairs as y-inversions with a Fenwick tree over
-    rank-compressed y, correct for x/y/joint ties. Replaces the earlier
-    O(n²) sign-matrix kernel — at the 5k sample cap that was ~0.9 s and
-    ~200 MB of intermediates per feature pair; this is ~10 ms and lets the
-    cap rise without a quadratic cliff.
+    """Reference kernel: Kendall tau-b in O(n log n) (Knight's algorithm):
+    sort by (x, y), count discordant pairs as y-inversions with a Fenwick
+    tree over rank-compressed y, correct for x/y/joint ties. Tests and
+    scripts/stress_kendall.py pin both engine kernels in
+    analytics/kendall_full.py against it; NaN where tau-b is undefined.
     """
     import numpy as np
 
@@ -452,46 +459,6 @@ def _tau_b(x, y) -> float:
     num = n0 - n1 - n2 + n3 - 2.0 * dis
     denom = np.sqrt((n0 - n1) * (n0 - n2))
     return float(num / denom) if denom > 0 else float("nan")
-
-
-def _kendall(df: DataFrame, feats: list[str], round_to: int | None) -> DataFrame:
-    """Kendall tau-b on a bounded sample via applyInPandas (Knight kernel).
-
-    Estimate quality: with a uniform random sample of size m (the salted-
-    hash prefix `_prepare` takes), |τ̂ − τ_population| has SE ≤ 2/√m and
-    Hoeffding tail 2·exp(−⌊m/2⌋t²/2) — see the module docstring."""
-    import pandas as pd
-
-    df = df.limit(KENDALL_MAX_SAMPLE)
-    schema = "feature_a string, feature_b string, corr double"
-
-    def tau_matrix(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for a in feats:
-            rows.append((a, a, 1.0))
-        for i, j in combinations(range(len(feats)), 2):
-            x = pdf[feats[i]].to_numpy(dtype=float)
-            y = pdf[feats[j]].to_numpy(dtype=float)
-            tau = _tau_b(x, y)
-            # + 0.0 canonicalizes −0.0, mirroring the SQL twin
-            # same FLOOR(x*s + 0.5)/s form as grid_snap/grid_snap_sql —
-            # Python round() is banker's rounding and would diverge from
-            # the oracle twin on exact ties
-            if round_to is not None and not (tau != tau):  # skip NaN
-                s10 = float(10**round_to)
-                import math
-
-                r = math.floor(tau * s10 + 0.5) / s10 + 0.0
-            else:
-                r = tau
-            rows.append((feats[i], feats[j], r))
-        return pd.DataFrame(rows, columns=["feature_a", "feature_b", "corr"])
-
-    return (
-        df.withColumn("__g", F.lit(1))
-        .groupBy("__g")
-        .applyInPandas(lambda pdf: tau_matrix(pdf.drop(columns="__g")), schema)
-    )
 
 
 def _grid_rank_tables(

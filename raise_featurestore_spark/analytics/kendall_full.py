@@ -1,54 +1,57 @@
-"""Distributed EXACT Kendall tau-b over the full data — no sample cap.
+"""EXACT Kendall tau-b for every feature pair — no sample cap.
 
-`analytics/correlation.py` serves kendall from a 50k bounded sample
-(with a documented U-statistic error bound), because tau has no
-single-aggregate closed form. This module computes the population
-tau-b exactly, distributed, in O(n log n)-ish work and memory bounded by
-max(partition, bucket) size:
+Every pair's tau-b comes from five integer terms:
 
     tau_b = (n0 − n1 − n2 + n3 − 2·D) / sqrt((n0 − n1)(n0 − n2))
 
-where n0 = n(n−1)/2, n1/n2 = x/y tie pairs, n3 = joint tie pairs (all
-plain distributed groupBys) and D = discordant pairs = inversions of the
-y-sequence under the global (x, y) sort. D decomposes into three DISJOINT,
-individually-distributed terms:
+where n0 = n(n−1)/2, n1/n2 = x/y tie pairs, n3 = joint (x, y) tie pairs
+and D = discordant pairs = inversions of the y-sequence under the (x, y)
+sort. Two kernels compute those terms and share one assembly
+(:func:`_assemble_tau_rows`), so their answers are bit-identical:
 
-1. **Within-partition** — rows range-partitioned and sorted by (x, y);
-   each partition counts its own inversions with a fully-vectorized
-   mergesort-level kernel over partition-local y ranks (`mapInPandas`,
-   memory = its own rows; `_local_inv`, pinned against the Fenwick
-   reference kernel).
-2. **Cross-partition, different y-bucket** — per-partition histograms
-   over B global y-RANK buckets (distinct y values get bucket ids from
-   the distributed rank kernel, so bucket order IS strict y order).
-   Pairs in different partitions AND different buckets are fully decided
-   by (partition, bucket) order: an exact einsum over the tiny P×B cell
-   matrix on the driver.
-3. **Cross-partition, same y-bucket** — rows shuffle by y-bucket
-   (~n/B each); within a bucket, inversions by global (x, y) order minus
-   each partition's internal inversions leaves exactly the
-   cross-partition pairs (`applyInPandas`, memory = bucket rows).
+- :func:`kendall_tau_single_task` — all rows in ONE Python task: a
+  lexsort per pair, `_local_inv` for D, run counts for n3. Lazy; it
+  serves small inputs and `correlation.py`'s bounded-sample kendall.
+- :func:`kendall_tau_matrix` — distributed, O(n log n)-ish work and
+  memory bounded by max(partition, bucket) size. Per-feature tie terms
+  come from one marginal pass; rows are replicated per pair and ONE
+  range exchange sorts them by (pair, x, y). D then decomposes into three
+  DISJOINT, individually-distributed terms:
 
-x-tie safety needs no correction anywhere: the range partitioner and all
-local sorts order by (x, y), so an equal-x pair always has ascending y —
-it can never be counted as an inversion, matching its true contribution
-of zero to D.
+  1. **Within-partition** — each partition counts its own inversions
+     with a fully-vectorized mergesort-level kernel (`mapInPandas`,
+     memory = its own rows; `_local_inv`, pinned against the Fenwick
+     reference kernel).
+  2. **Cross-partition, different y-bucket** — per-partition histograms
+     over B global y-RANK buckets (distinct y values get bucket ids from
+     the distributed rank kernel, so bucket order IS strict y order).
+     Pairs in different partitions AND different buckets are fully
+     decided by (partition, bucket) order: an exact einsum over the tiny
+     P×B cell matrix on the driver.
+  3. **Cross-partition, same y-bucket** — rows shuffle by y-bucket
+     (~n/B each); within a bucket, inversions by global (x, y) order
+     minus each partition's internal inversions leaves exactly the
+     cross-partition pairs (`applyInPandas`, memory = bucket rows).
+
+  x-tie safety needs no correction anywhere: the range partitioner and
+  all local sorts order by (x, y), so an equal-x pair always has
+  ascending y — it can never be counted as an inversion, matching its
+  true contribution of zero to D.
 
 Counts are exact int64 inside kernels and DECIMAL(38,0) across the final
-aggregation; the formula itself runs in Python floats on the driver
-(n0 ~ n²/2 exceeds int64 past ~4.3e9 rows — the decimal path keeps the
-COUNTED terms exact well past that). CEILING: the
-EMITTED ``concordant_minus_discordant`` column is typed ``long``, and
-|C−D| ≤ n0, so past ~4.3e9 input rows the output COLUMN (not the
-internal counting) can overflow — the driver-hash dtype contract pins
-int64 here (a DECIMAL output would flip the rendered dtype family on
-both engines), so the schema keeps long and this ceiling is the
-documented limit of that one output column; ``corr`` itself stays
-correct (computed from the Python ints before the column cast).
+aggregation; the formula itself runs on Python ints and one float
+division (n0 ~ n²/2 exceeds int64 past ~4.3e9 rows — the decimal path
+keeps the COUNTED terms exact well past that). CEILING: the EMITTED
+``concordant_minus_discordant`` column is typed ``long``, and |C−D| ≤ n0,
+so past ~4.3e9 input rows that one output column NULLs — the driver-hash
+dtype contract pins int64 here (a DECIMAL output would flip the rendered
+dtype family on both engines); ``corr`` itself stays correct (computed
+from the Python ints before the column cast).
 
 Oracle: the direct O(n²) pair definition in DuckDB on the same (bounded)
 input — the driver gate runs it at sf0.01 where n² is affordable, and
-tests/stress pin equality with the Knight O(n log n) kernel at 100k+ rows.
+tests/stress pin equality with the Knight O(n log n) kernel
+(`correlation._tau_b`) at up to 1M rows.
 """
 
 from __future__ import annotations
@@ -61,6 +64,11 @@ from pyspark.sql import functions as F
 from raise_featurestore_spark.functions.conf_scope import scoped_checkpoint
 
 DEFAULT_BUCKETS = 64
+_COLUMNS = ["feature_a", "feature_b", "n", "concordant_minus_discordant", "corr"]
+_SCHEMA = (
+    "feature_a string, feature_b string, n long, "
+    "concordant_minus_discordant long, corr double"
+)
 
 
 def _fenwick_inversions(yr: np.ndarray, size: int) -> int:
@@ -131,202 +139,6 @@ def _local_inv(y: np.ndarray) -> int:
     return inv
 
 
-def kendall_tau_full(
-    df: DataFrame,
-    feature_x: str,
-    feature_y: str,
-    n_buckets: int = DEFAULT_BUCKETS,
-    num_partitions: int | None = None,
-    round_to: int | None = 4,
-) -> DataFrame:
-    """One row: (feature_a, feature_b, n, concordant_minus_discordant,
-    corr) — the EXACT tau-b over every input row."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from raise_featurestore_spark.functions.prefix import range_prefix_sums
-
-    spark = df.sparkSession
-    xy = (
-        df.select(
-            F.col(feature_x).cast("double").alias("__x"),
-            F.col(feature_y).cast("double").alias("__y"),
-        )
-        .na.drop()
-    )
-
-    # ----- ONE pass over the data builds the (x, y, count) cell frame;
-    # every tie term AND the y-rank bucketing derive from it (three
-    # separate full-data groupBys measured ~30% of 1M-row wall-clock).
-    # Checkpointed because four downstream jobs read it.
-    cells = scoped_checkpoint(
-        xy.groupBy("__x", "__y").agg(F.count(F.lit(1)).alias("c")), eager=True
-    )
-
-    _pairs = (F.col("c").cast("decimal(38,0)") * (F.col("c") - 1) / 2).cast(
-        "decimal(38,0)"
-    )
-
-    def _tie_n3():
-        row = cells.agg(F.sum(_pairs).alias("p"), F.sum("c").alias("n")).collect()[0]
-        return int(row.p or 0), int(row.n or 0)
-
-    def _tie_marginal(col: str):
-        m = cells.groupBy(col).agg(F.sum("c").alias("c"))
-        row = m.agg(
-            F.sum(_pairs).alias("p"), F.count(F.lit(1)).alias("nd")
-        ).collect()[0]
-        return int(row.p or 0), int(row.nd or 0)
-
-    # the three tie collects are independent jobs over the pinned cells —
-    # submit them concurrently (legit Spark: DAGScheduler shares stages)
-    with ThreadPoolExecutor(max_workers=3) as ex:
-        f3 = ex.submit(_tie_n3)
-        f1 = ex.submit(_tie_marginal, "__x")
-        f2 = ex.submit(_tie_marginal, "__y")
-        n3, n = f3.result()
-        n1, _ = f1.result()
-        n2, ny = f2.result()
-    if n < 2:
-        out = [(feature_x, feature_y, n, 0, None)]
-        return spark.createDataFrame(
-            out,
-            "feature_a string, feature_b string, n long, "
-            "concordant_minus_discordant long, corr double",
-        )
-    n0 = n * (n - 1) // 2
-
-    # ----- global y-rank buckets: distinct y values -> dense-rank bucket
-    # id, from the cells' y-marginal (NOT a rescan of the data); avg_rank
-    # via the distributed prefix kernel — no single-task global sort
-    ycells = cells.groupBy(F.col("__y").alias("v")).agg(F.sum("c").alias("t"))
-    ydist = range_prefix_sums(ycells, "v", {"__cum": "t"}).withColumn(
-        "avg_rank", F.col("__cum") - (F.col("t") - F.lit(1)) / F.lit(2.0)
-    )
-    # n-adaptive cap: a bucket below ~256 rows is pure task/stage
-    # overhead — at tiny filtered inputs the 64-bucket default cost 1.7×
-    # the 8-bucket plan with zero benefit. Bucket count only partitions
-    # the exchange; the decomposition is exact at ANY bucket count
-    # (1M stress runs 64 and 16 bit-identical).
-    b = min(n_buckets, max(1, n // 256), max(1, ny))
-    # avg_rank is strictly increasing over distinct v and lives on the ROW
-    # scale [1, n], so bucketing it yields ~equal-FREQUENCY buckets (skew-
-    # proof) while preserving strict y order between buckets
-    ybuck = ydist.select(
-        F.col("v"),
-        F.least(
-            F.lit(b - 1),
-            ((F.col("avg_rank") - 0.5) * b / F.lit(float(n))).cast("int"),
-        ).alias("__yb"),
-    )
-    rows = xy.join(F.broadcast(ybuck) if ny <= 2_000_000 else ybuck,
-                   xy["__y"] == ybuck["v"]).select("__x", "__y", "__yb")
-
-    # ----- global (x, y) range sort with partition ids.
-    # eager checkpoint: the decomposition below reads this frame in
-    # TWO separate jobs (term 1+2 histograms, term 3 bucket shuffle), and
-    # repartitionByRange picks its boundaries by SAMPLING — recomputing it
-    # per job can assign the same row different __pid values, silently
-    # dropping/double-counting cross-partition pairs (caught at 30k rows:
-    # tau off by ~1e-4 in either direction). Freezing the rows pins one
-    # consistent (order, pid, bucket) view for every term.
-    p = num_partitions or spark.sparkContext.defaultParallelism
-    srt = scoped_checkpoint(
-        rows.repartitionByRange(p, "__x", "__y")
-        .sortWithinPartitions("__x", "__y")
-        .withColumn("__pid", F.spark_partition_id()),
-        eager=True,
-    )
-
-    # ----- term 1 + histograms in ONE pass over the sorted partitions
-    def part_stats(batches):
-        xs: list[np.ndarray] = []
-        ys: list[np.ndarray] = []
-        bs: list[np.ndarray] = []
-        pid = -1
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pid = int(pdf["__pid"].iloc[0])
-            xs.append(pdf["__x"].to_numpy())
-            ys.append(pdf["__y"].to_numpy())
-            bs.append(pdf["__yb"].to_numpy())
-        if pid < 0:
-            return
-        y = np.concatenate(ys)
-        yb = np.concatenate(bs)
-        inv = _local_inv(y)
-        out = [{"kind": 0, "pid": pid, "yb": -1, "v": inv}]
-        vals, cnts = np.unique(yb, return_counts=True)
-        for u, c in zip(vals, cnts):
-            out.append({"kind": 1, "pid": pid, "yb": int(u), "v": int(c)})
-        yield pd.DataFrame(out)
-
-    # ----- term 3 definition up front so terms 1+2 and 3 — independent
-    # jobs over the SAME pinned frame — run concurrently (saves the
-    # shorter term's wall-clock outright)
-    def bucket_inv(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["__x", "__y"], kind="mergesort")
-        total = _local_inv(pdf["__y"].to_numpy())
-        within = 0
-        for _, g in pdf.groupby("__pid", sort=False):
-            within += _local_inv(g["__y"].to_numpy())
-        return pd.DataFrame({"v": [total - within]})
-
-    def _term3() -> int:
-        row = (
-            srt.groupBy("__yb")
-            .applyInPandas(bucket_inv, "v long")
-            .agg(F.sum(F.col("v").cast("decimal(38,0)")).alias("s"))
-            .collect()[0]
-        )
-        return int(row.s or 0)
-
-    with ThreadPoolExecutor(max_workers=2) as ex:
-        fut3 = ex.submit(_term3)
-        stats = srt.mapInPandas(
-            part_stats, "kind int, pid int, yb int, v long"
-        ).collect()
-        d_cross_same = fut3.result()
-    d_local = sum(r.v for r in stats if r.kind == 0)
-    # term 2: exact driver einsum over the P×B cell matrix
-    maxpid = max((r.pid for r in stats if r.kind == 1), default=0)
-    M = np.zeros((maxpid + 1, b), dtype=np.int64)
-    for r in stats:
-        if r.kind == 1:
-            M[r.pid, r.yb] = r.v
-    # pairs (p < q, yb_p > yb_q): for each (q, bucket v), count of earlier
-    # partitions' rows in strictly higher buckets
-    pref_parts = np.cumsum(M, axis=0)  # inclusive over partitions
-    d_cross_diff = 0
-    for q in range(1, maxpid + 1):
-        earlier = pref_parts[q - 1]  # per-bucket counts in partitions < q
-        suffix = np.cumsum(earlier[::-1])[::-1]  # counts in buckets >= v
-        higher = np.concatenate([suffix[1:], [0]])  # strictly > v
-        # python-int products: the int64 dot would overflow past ~1e9-row
-        # partitions x buckets; P*B terms are trivially few
-        d_cross_diff += sum(int(a) * int(h) for a, h in zip(M[q], higher))
-
-    d = d_local + d_cross_diff + d_cross_same
-
-    cmd = n0 - n1 - n2 + n3 - 2 * d  # C - D
-    denom = float(np.sqrt(float(n0 - n1) * float(n0 - n2)))
-    tau = (float(cmd) / denom) if denom > 0 else None  # all-tied: NULL
-    if round_to is not None and tau is not None:
-        import math
-
-        s10 = float(10**round_to)  # grid_snap's floor form, driver-side
-        tau = math.floor(tau * s10 + 0.5) / s10 + 0.0
-    # the emitted long column NULLs past int64 (~4.3e9 rows; module
-    # docstring) rather than failing the whole result — tau above is
-    # already computed from the exact Python ints
-    cmd_out = int(cmd) if abs(cmd) < 2**63 else None
-    return spark.createDataFrame(
-        [(feature_x, feature_y, n, cmd_out, tau)],
-        "feature_a string, feature_b string, n long, "
-        "concordant_minus_discordant long, corr double",
-    )
-
-
 def kendall_tau_full_sql(
     table: str,
     feature_x: str,
@@ -340,9 +152,8 @@ def kendall_tau_full_sql(
     from raise_featurestore_spark.functions.stable import grid_snap_sql
 
     w = f" WHERE ({where}) AND " if where else " WHERE "
-    # NOT ISNAN mirrors the Spark side's na.drop(), which drops NaN rows
-    # for double columns — IS NOT NULL alone would keep them here and
-    # diverge n
+    # NOT ISNAN mirrors the Spark side's row filter, which drops NaN rows
+    # too — IS NOT NULL alone would keep them here and diverge n
     w += (
         f"{feature_x} IS NOT NULL AND {feature_y} IS NOT NULL "
         f"AND NOT ISNAN(CAST({feature_x} AS DOUBLE)) "
@@ -380,8 +191,7 @@ def kendall_tau_matrix(
     """EXACT tau-b for every feature pair — the reference's N×N
     Correlation matrix semantics (raise_/analytics/analysis.py:152-195)
     at full-population exactness, amortized over ONE range exchange
-    (calling kendall_tau_full per pair would re-shuffle the frame
-    N(N−1)/2 times).
+    (a per-pair exchange would re-shuffle the frame N(N−1)/2 times).
 
     How one range partitioning serves every pair despite each pair
     sorting by a different (x, y): the clean rows are REPLICATED into a
@@ -402,8 +212,12 @@ def kendall_tau_matrix(
 
     NULL semantics: LISTWISE — a row missing/NaN in ANY feature is
     dropped from every pair, the standard correlation-matrix contract
-    (pairwise-complete would make each pair's n differ; the single-pair
-    kendall_tau_full keeps pairwise semantics).
+    (pairwise-complete would make each pair's n differ). For two
+    features listwise and pairwise drop are the same filter.
+
+    Inputs of at most ``small_n`` rows (and every input below 2 rows)
+    skip the exchange: they return :func:`kendall_tau_single_task` over
+    the same filtered rows, bit-identical by the shared assembly.
 
     Returns one row per unordered pair (i < j in ``features`` order):
     (feature_a, feature_b, n, concordant_minus_discordant, corr).
@@ -444,72 +258,23 @@ def kendall_tau_matrix(
     tie = {int(r.fi): int(r.p or 0) for r in trows}
     n = int(trows[0].n) if trows else 0
     ndist = {int(r.fi): int(r.nd) for r in trows}
-    schema = (
-        "feature_a string, feature_b string, n long, "
-        "concordant_minus_discordant long, corr double"
-    )
-    if n < 2:
-        return spark.createDataFrame(
-            [(features[i], features[j], n, 0, None) for i, j in pairs], schema
-        )
+    if n < 2 or n <= small_n:
+        # below ~50k rows the bucket grid, range exchange and two term
+        # jobs are pure stage overhead (~45-task floors at ~2k rows); one
+        # lazy single-task pass over n·k doubles (a few MB) replaces
+        # them. scripts/stress_kendall.py (1M rows) exceeds this
+        # threshold and keeps exercising the distributed decomposition.
+        return kendall_tau_single_task(clean, features, round_to)
     n0 = n * (n - 1) // 2
 
-    if n <= small_n:
-        # tiny-n fast path: below the sampled-kendall
-        # guard the distributed bucket grid + range exchange + two term
-        # jobs are pure stage overhead (~45-task floors at ~2k rows), so
-        # compute every pair's discordant count in ONE single-group
-        # applyInPandas pass — n·k doubles ≤ a few MB through one
-        # exchange. Bit-identical to the distributed path by
-        # construction: same marginal-pass tie terms, same y-inversion
-        # definition over the same (x, y) sort, and the shared
-        # _assemble_tau_rows formula. The 1M-row stress harness
-        # (scripts/stress_kendall.py) exceeds this threshold and keeps
-        # exercising the distributed decomposition.
-        pair_list = list(pairs)
-
-        def knight_all_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-            out = []
-            for pi, (i, j) in enumerate(pair_list):
-                x = pdf[f"__f{i}"].to_numpy()
-                y = pdf[f"__f{j}"].to_numpy()
-                order = np.lexsort((y, x))
-                xs, ys = x[order], y[order]
-                d = int(_local_inv(ys))
-                if len(xs) > 1:
-                    change = np.empty(len(xs), dtype=bool)
-                    change[0] = True
-                    change[1:] = (xs[1:] != xs[:-1]) | (ys[1:] != ys[:-1])
-                    rc = np.diff(np.append(np.flatnonzero(change), len(xs)))
-                    n3 = int((rc * (rc - 1) // 2).sum())
-                else:
-                    n3 = 0
-                out.append((pi, d, n3))
-            return pd.DataFrame(out, columns=["pair", "d", "n3"])
-
-        small = (
-            clean.withColumn("__g", F.lit(1))
-            .groupBy("__g")
-            .applyInPandas(
-                lambda pdf: knight_all_pairs(pdf.drop(columns="__g")),
-                "pair int, d long, n3 long",
-            )
-            .collect()
-        )
-        d_small = {int(r.pair): int(r.d) for r in small}
-        n3_small = {int(r.pair): int(r.n3) for r in small}
-        return spark.createDataFrame(
-            _assemble_tau_rows(
-                pairs, features, tie, n, n0, d_small, n3_small, round_to
-            ),
-            schema,
-        )
-
     # rank buckets per feature (grouped prefix kernel; monotone in v and
-    # ~equal-frequency, same construction as the single-pair path).
-    # n-adaptive cap as in kendall_tau_full: ≥ ~256 rows per bucket, or
+    # ~equal-frequency). avg_rank = cum − (t−1)/2 is strictly increasing
+    # over distinct v and lives on the ROW scale [1, n], so bucketing it
+    # yields ~equal-FREQUENCY buckets (skew-proof) while preserving strict
+    # v order between buckets. n-adaptive cap: ≥ ~256 rows per bucket, or
     # the bucket grid is pure task overhead at small filtered inputs —
-    # partitioning only, exact at any bucket count
+    # partitioning only, exact at any bucket count (1M stress runs 64 and
+    # 16 bit-identical)
     b = min(n_buckets, max(1, n // 256), max(1, max(ndist.values())))
     ranked = grouped_range_prefix_sums(marg, ["fi"], "v", {"__cum": "t"})
     vbuck = ranked.select(
@@ -542,8 +307,12 @@ def kendall_tau_matrix(
         vb, (F.col("__yf") == F.col("__bfi")) & (F.col("__y") == F.col("__bv"))
     ).select("__pair", "__x", "__y", "__yb")
 
-    # ----- THE one range exchange for every pair (see module docstring
-    # for why the checkpoint is mandatory). Partition count: capped at
+    # ----- THE one range exchange for every pair. The checkpoint is
+    # mandatory: the term jobs read this frame in two scans, and
+    # repartitionByRange picks its boundaries by SAMPLING — recomputing it
+    # per scan can assign the same row different __pid values, silently
+    # dropping/double-counting cross-partition pairs (caught at 30k rows:
+    # tau off by ~1e-4 in either direction). Partition count: capped at
     # parallelism × pairs (per-partition memory keeps the single-pair
     # bound at scale), but sized DOWN to the data via the row count the
     # marginal pass already collected. A fixed cap spends ~3 s of per-task
@@ -581,18 +350,9 @@ def kendall_tau_matrix(
                     {"kind": 1, "pair": int(pr), "pid": pid, "yb": int(u),
                      "v": int(c)}
                 )
-            # joint (x, y) tie pairs: runs in the (x, y)-sorted partition;
-            # equal keys never split across range partitions, so the
-            # per-partition run counts sum to the exact global n3
-            x = g["__x"].to_numpy()
-            if len(g) > 1:
-                change = np.empty(len(g), dtype=bool)
-                change[0] = True
-                change[1:] = (x[1:] != x[:-1]) | (y[1:] != y[:-1])
-                rc = np.diff(np.append(np.flatnonzero(change), len(g)))
-                n3p = int((rc * (rc - 1) // 2).sum())
-            else:
-                n3p = 0
+            # equal (x, y) keys never split across range partitions, so
+            # the per-partition run counts sum to the exact global n3
+            n3p = _joint_tie_pairs(g["__x"].to_numpy(), y)
             out.append({"kind": 2, "pair": int(pr), "pid": pid, "yb": -1, "v": n3p})
         yield pd.DataFrame(out)
 
@@ -671,17 +431,79 @@ def kendall_tau_matrix(
         d_by[pi] = d_local[pi] + d_diff + d_same.get(pi, 0)
     return spark.createDataFrame(
         _assemble_tau_rows(pairs, features, tie, n, n0, d_by, n3_by, round_to),
-        schema,
+        _SCHEMA,
     )
+
+
+def _joint_tie_pairs(x: np.ndarray, y: np.ndarray) -> int:
+    """Joint tie pairs Σ c(c−1)/2 over the runs of equal (x, y) in an
+    (x, y)-sorted sequence."""
+    if len(x) < 2:
+        return 0
+    change = np.empty(len(x), dtype=bool)
+    change[0] = True
+    change[1:] = (x[1:] != x[:-1]) | (y[1:] != y[:-1])
+    rc = np.diff(np.append(np.flatnonzero(change), len(x)))
+    return int((rc * (rc - 1) // 2).sum())
+
+
+def _single_task_rows(a: np.ndarray, features, round_to) -> list[tuple]:
+    """Every pair's tau-b row from the (n, k) value matrix ``a`` (column i
+    holds ``features[i]``, no NULL/NaN)."""
+    n, k = a.shape
+    pairs = [(i, j) for i in range(k) for j in range(i + 1, k)]
+    tie = {}
+    for i in range(k):
+        _, c = np.unique(a[:, i], return_counts=True)
+        tie[i] = int((c * (c - 1) // 2).sum())
+    d_by, n3_by = {}, {}
+    for pi, (i, j) in enumerate(pairs):
+        order = np.lexsort((a[:, j], a[:, i]))
+        xs, ys = a[order, i], a[order, j]
+        d_by[pi] = _local_inv(ys)
+        n3_by[pi] = _joint_tie_pairs(xs, ys)
+    return _assemble_tau_rows(
+        pairs, features, tie, n, n * (n - 1) // 2, d_by, n3_by, round_to
+    )
+
+
+def kendall_tau_single_task(
+    df: DataFrame, features: list[str], round_to: int | None = 4
+) -> DataFrame:
+    """Lazy exact tau-b for every feature pair, computed in ONE Python
+    task: :func:`kendall_tau_matrix`'s rows for a frame whose columns, in
+    order, hold ``features``' values with no NULL/NaN.
+
+    The rows travel as one flat array from a global ``collect_list``
+    aggregate, which yields exactly one row even for empty input — so the
+    task always runs and an empty frame returns its pairs with n = 0 and
+    a NULL corr, as the oracle does. Memory is n·k doubles in one task:
+    callers bound n (``small_n``, the sample cap)."""
+    k = len(features)
+    packed = df.agg(
+        F.flatten(
+            F.collect_list(F.array(*[F.col(c).cast("double") for c in df.columns]))
+        ).alias("__v")
+    )
+
+    def run(batches):
+        for pdf in batches:
+            for v in pdf["__v"]:
+                a = np.asarray(v, dtype=np.float64).reshape(-1, k)
+                yield pd.DataFrame(
+                    _single_task_rows(a, features, round_to), columns=_COLUMNS
+                )
+
+    return packed.mapInPandas(run, _SCHEMA)
 
 
 def _assemble_tau_rows(
     pairs, features, tie, n, n0, d_by, n3_by, round_to
 ) -> list[tuple]:
     """Final tau-b rows from per-pair discordant/joint-tie counts. Shared
-    by the distributed and small-n paths so both compute the SAME integer
-    terms and the SAME deterministic IEEE division + floor rounding —
-    bit-identity between the paths is by construction, not by test luck."""
+    by the distributed and single-task kernels so both compute the SAME
+    integer terms and the SAME deterministic IEEE division + floor
+    rounding — bit-identity between them is by construction."""
     import math
 
     out_rows = []
@@ -692,6 +514,9 @@ def _assemble_tau_rows(
         denom = float(np.sqrt(float(n0 - n1) * float(n0 - n2)))
         tau = (float(cmd) / denom) if denom > 0 else None
         if round_to is not None and tau is not None:
+            # grid_snap_sql's FLOOR(x·s + 0.5)/s (Python's round() is
+            # banker's and would split exact ties from the oracle); + 0.0
+            # canonicalizes −0.0
             s10 = float(10**round_to)
             tau = math.floor(tau * s10 + 0.5) / s10 + 0.0
         cmd_out = int(cmd) if abs(cmd) < 2**63 else None

@@ -195,45 +195,27 @@ def _dec_bad(c: Column, grid_decimals: int) -> Column:
     return F.isnan(c) | (F.abs(c) >= F.lit(dec_domain_limit(grid_decimals)))
 
 
-def dec_term(c: Column, grid_decimals: int = 4) -> Column:
-    """Per-row exact-decimal term: snap to the grid (IEEE floor form),
-    NULL out rows the decimal cannot hold, cast to DECIMAL(18, g).
-    THE single source for every exact-moment accumulator (aggregation,
-    rolling, scalers, Gram) — grid/precision fixes belong here only.
-
-    Prefer :func:`dec_scaled` for new accumulators: same grid, same
-    answers, but the per-row term is a LONG-backed integer decimal —
-    the double→DECIMAL(18,g) cast here is the measured hot cost of the
-    exact path (r7 VERDICT item 1), ~4-6× slower per row."""
-    return F.when(~_dec_bad(c, grid_decimals), grid_snap(c, grid_decimals)).cast(
-        f"decimal(18,{grid_decimals})"
-    )
-
-
 def dec_scaled(c: Column, grid_decimals: int = 4) -> Column:
-    """Per-row exact term on the SAME 10^-g grid as :func:`dec_term`,
-    held as the SCALED INTEGER value·10^g in DECIMAL(18,0) — the int64
-    grid fast path (r7 VERDICT item 1). ``floor(x·10^g + 0.5)`` is
-    Spark's BIGINT-typed floor, and the long→decimal(18,0) cast is a
-    compact-representation no-op, so the whole term stays in
-    Tungsten-native long arithmetic (measured 4-6× the double→decimal
-    cast chain of dec_term). Sums of these terms are exact integers —
-    associative, mergeable, order-free like the dec_term path, with the
-    IDENTICAL capacity bounds (sum buffer DECIMAL(28,0) holds the same
-    value·10^g mass as dec_term's DECIMAL(28,g); squares peak at the
-    same 10^34 per row under the 10^(17-g) domain limit).
+    """Per-row exact term: snap to the 10^-g grid (IEEE floor form),
+    NULL out rows the grid cannot hold (:func:`_dec_bad`), and hold the
+    SCALED INTEGER value·10^g in DECIMAL(18,0). The per-row term of every
+    exact-moment accumulator — grid/precision fixes belong here only.
+    ``floor(x·10^g + 0.5)`` is Spark's BIGINT-typed floor, and the
+    long→decimal(18,0) cast is a compact-representation no-op, so the
+    whole term stays in Tungsten-native long arithmetic (measured 4-6×
+    faster than a double→DECIMAL(18,g) cast chain). Sums of these terms
+    are exact integers — associative, mergeable, order-free; the sum
+    buffer DECIMAL(28,0) holds value·10^g mass, and squares peak at 10^34
+    per row under the 10^(17-g) domain limit.
 
     Conversion contract (mirrored EXACTLY in the SQL twins): the emitted
     double is ``CAST(sum AS DOUBLE) / 10^g`` — decimal→double once
     (correctly rounded), then one IEEE division by the exact power-of-ten
     double (exact for g ≤ 22). Both engines run this same two-step
-    sequence, so the bits agree; values can sit 1 ulp from the old
-    single-cast dec_term emission, which is why dec_sum/dec_var and
-    every *_sql twin switched in LOCKSTEP.
+    sequence, so the bits agree.
 
-    Out-of-domain rows NULL out exactly as in dec_term (the when-guard
-    also keeps ANSI's long-typed floor from ever seeing |x·10^g| ≥ 2^63:
-    the domain limit caps it at 10^17)."""
+    The when-guard also keeps ANSI's long-typed floor from ever seeing
+    |x·10^g| ≥ 2^63: the domain limit caps it at 10^17."""
     snapped = _floor_half_up(c * F.lit(float(10**grid_decimals)))
     return F.when(~_dec_bad(c, grid_decimals), snapped).cast("decimal(18,0)")
 
@@ -397,7 +379,7 @@ def dec_sum_sql(
 
 def dec_var(c: Column, grid_decimals: int = 4) -> Column:
     """Order-independent SAMPLE VARIANCE of a double column, as a double:
-    exact-decimal moments (dec_term), NaN-poisoned (dec_poison/poisoned),
+    exact-decimal moments (dec_scaled), NaN-poisoned (dec_poison/poisoned),
     NULL for n < 2, clamped at 0 against catastrophic cancellation (a
     constant column's exact moments still cancel to ~-1e-24 in the final
     double subtraction, and DuckDB's SQRT(negative) downstream is a hard

@@ -300,7 +300,7 @@ _CORR_K = Correlation(features=["value", "user_id"], method="kendall", sample_si
 register(
     # Sampled kendall tau-b, oracle-paired: the deterministic hash-ordered
     # sample lets DuckDB afford the direct O(n²) pair definition at
-    # n=2000, cross-checking the distributed Knight O(n log n) kernel.
+    # n=2000, cross-checking the single-task O(n log n) kernel.
     "corr_kendall_sampled",
     lambda spark, sf_dir: compile_correlation(load_table(spark, sf_dir, "events"), _CORR_K),
     kendall_to_sql(_CORR_K, "events"),
@@ -1286,14 +1286,12 @@ register(
     FN.funnel_report_sql("events", ["signup", "view", "purchase"]),
 )
 
-# Distributed EXACT kendall tau-b (analytics/kendall_full.py): no sample
-# cap — the r5 "what's missing" item. Inversion counting decomposed into
-# within-partition Fenwick + cross-partition histogram cells + per-bucket
-# residue; oracle = the direct O(n²) pair definition on the same input
-# (affordable at gate scale; equality with the Knight kernel pinned at
-# 100k rows in tests and 1M in scripts/stress_kendall.py).
+# EXACT kendall tau-b, no sample cap (analytics/kendall_full.py): one
+# pair is the two-feature matrix, where listwise and pairwise NULL/NaN
+# drop are the same filter. Oracle = the direct O(n²) pair definition on
+# the same input (affordable at gate scale; equality with the Knight
+# kernel is pinned in tests and at 1M rows in scripts/stress_kendall.py).
 from raise_featurestore_spark.analytics.kendall_full import (
-    kendall_tau_full,
     kendall_tau_full_sql,
     kendall_tau_matrix,
     kendall_tau_matrix_sql,
@@ -1303,17 +1301,16 @@ _KF_WHERE = "event_type = 'purchase' AND user_id % 4 = 0"
 
 register(
     "corr_kendall_full",
-    lambda spark, sf_dir: kendall_tau_full(
+    lambda spark, sf_dir: kendall_tau_matrix(
         load_table(spark, sf_dir, "events").where(_KF_WHERE),
-        "value",
-        "user_id",
+        ["value", "user_id"],
     ),
     kendall_tau_full_sql("events", "value", "user_id", where=_KF_WHERE),
 )
 
-# Exact-Kendall MATRIX (r6 VERDICT item 4): every feature pair from ONE
-# data-scale range exchange — pair replication + shared marginal tie/rank
-# pass (analytics/kendall_full.py:kendall_tau_matrix; reference matrix
+# Exact-Kendall MATRIX: every feature pair from ONE data-scale range
+# exchange — pair replication + shared marginal tie/rank pass
+# (analytics/kendall_full.py:kendall_tau_matrix; reference matrix
 # semantics raise_/analytics/analysis.py:152-195). Listwise NULL/NaN drop;
 # oracle = per-pair O(n²) definitions UNION ALL'd under the same filter.
 _KM_FEATS = ["value", "user_id", "event_id"]
@@ -1393,11 +1390,11 @@ register(
     f"FROM ({correlation_to_sql(_WIDE_S, _WIDE_TBL)})",
 )
 
-# Exact kendall tau-b at k=10 (45 pairs, one range exchange for ALL of
-# them): gates the r8 dense-pid fix (kendall_full.py:489) at the PRD's
-# matrix width. The row filter bounds n so the oracle can afford the 45
-# O(n²) pair definitions; the k=10 DATA-scale wall time is measured by
-# scripts/stress_kendall.py (1M rows) and recorded in PERF.md.
+# Exact kendall tau-b at k=10 (45 pairs) at the PRD's matrix width. The
+# row filter bounds n so the oracle can afford the 45 O(n²) pair
+# definitions (and so this gate runs the single-task kernel); the k=10
+# distributed path and its per-pair dense-pid driver cost are measured by
+# scripts/stress_kendall.py (1M rows).
 _KW_WHERE = "l_orderkey % 256 = 0"
 
 register(

@@ -1,7 +1,8 @@
 """SparkSession factory tuned for the engine.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32); the same
-configs are what we would set on a real multi-executor cluster:
+Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default: the cores
+this process may run on, ``os.sched_getaffinity``); the same configs are
+what we would set on a real multi-executor cluster:
 
 - AQE on (runtime re-planning, skew-join splitting, partition coalescing).
 - Arrow on (fast toPandas / pandas_udf transfer).
@@ -20,7 +21,7 @@ from pyspark.sql import SparkSession
 
 def get_spark(app_name: str = "raise-featurestore-spark", cpus: int | None = None) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")

@@ -48,8 +48,7 @@ from raise_featurestore_spark.functions.stable import (
 # merge_rollups asserts scale 0 on both inputs (raises on pre-r8
 # partials), and the streaming maintainer stamps a ``_format_version``
 # marker into the live state dir and refuses to merge onto a mismatched
-# or unmarked generation. ``migrate_rollup_partials`` is the one-shot
-# rescale for old state.
+# generation.
 _G1 = 1e4
 _G2 = 1e8
 
@@ -131,36 +130,8 @@ def _assert_scaled_partials(df: DataFrame, which: str) -> None:
             raise ValueError(
                 f"rollup merge: {which} partials column {name!r} has decimal "
                 f"scale {dt.scale} — pre-r8 dec_term format (value-scale), "
-                "incompatible with the current scaled-integer format. "
-                "Run migrate_rollup_partials() once to rescale old state."
+                "incompatible with the current scaled-integer format."
             )
-
-
-def migrate_rollup_partials(old: DataFrame) -> DataFrame:
-    """One-shot rescale of pre-r8 dec_term partials (s1/ss at value scale,
-    decimal scale 4/8) into the current scaled-integer format
-    (value*1e4 / value^2*1e8, decimal scale 0). Counts/min/max/poison are
-    format-stable. Write the result as the new live generation, stamped
-    with the current format version."""
-    _c = old
-    if "uf" not in _c.columns:
-        _c = _c.withColumn("uf", F.lit(0).cast("long"))
-    from pyspark.sql.types import DecimalType
-
-    s1t, sst = _c.schema["s1"].dataType, _c.schema["ss"].dataType
-    if not (
-        isinstance(s1t, DecimalType)
-        and s1t.scale == 4
-        and isinstance(sst, DecimalType)
-        and sst.scale == 8
-    ):
-        raise ValueError(
-            "migrate_rollup_partials expects the pre-r8 dec_term layout "
-            f"(s1 scale 4, ss scale 8); got s1={s1t} ss={sst}"
-        )
-    return _c.withColumn(
-        "s1", (F.col("s1") * F.lit(10**4)).cast("decimal(28,0)")
-    ).withColumn("ss", (F.col("ss") * F.lit(10**8)).cast("decimal(38,0)"))
 
 
 def merge_rollups(
@@ -172,12 +143,6 @@ def merge_rollups(
     keys = ([group_by] if group_by else []) + ["period_start"]
     _assert_scaled_partials(existing, "existing")
     _assert_scaled_partials(delta, "delta")
-    # pre-r7 stored partials lack the underflow column; absent counts are
-    # conservatively 0 (those rows predate the sentinel)
-    if "uf" not in existing.columns:
-        existing = existing.withColumn("uf", F.lit(0).cast("long"))
-    if "uf" not in delta.columns:
-        delta = delta.withColumn("uf", F.lit(0).cast("long"))
     return (
         existing.unionByName(delta)
         .groupBy(*keys)
@@ -202,8 +167,6 @@ def finalize_rollup(
     """Finished metrics from partials — a pure projection (no scan of the
     base table). Formulas match analytics/aggregation.py's exact path, so
     a finalized incremental rollup hash-matches a direct Aggregation."""
-    if "uf" not in partials.columns:
-        partials = partials.withColumn("uf", F.lit(0).cast("long"))
     n = F.col("n").cast("double")
     s1 = F.col("s1").cast("double") / F.lit(_G1)
     ss = F.col("ss").cast("double") / F.lit(_G2)
@@ -365,9 +328,8 @@ def make_rollup_batch_fn(
             raise ValueError(
                 f"rollup state at {live!r} was written by partial format "
                 f"{found!r}; this maintainer writes {format_version!r}. "
-                "Refusing to merge incompatible partials — migrate the "
-                "state (migrate_rollup_partials) or point at a fresh "
-                "state_path."
+                "Refusing to merge incompatible partials — point at a "
+                "fresh state_path."
             )
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:

@@ -1,8 +1,9 @@
-"""1M-row differential for the distributed exact Kendall tau-b.
+"""1M-row differential for the distributed exact Kendall tau-b matrix.
 
 Ground truth is the Knight O(n log n) kernel (`correlation._tau_b`) on the
 same driver-collected arrays — exact, so the distributed 3-term inversion
-decomposition must agree BIT-FOR-BIT, not within a band. Heavy ties in
+decomposition must agree BIT-FOR-BIT, not within a band. One pair is the
+two-feature matrix; 3- and 10-feature matrices follow. Heavy ties in
 both columns exercise every tie term; the partition/bucket grid shakes the
 decomposition's boundary cases at a scale where an off-by-one across a
 range boundary is ~certain to surface.
@@ -23,7 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main(n: int = 1_000_000) -> None:
     from raise_featurestore_spark.analytics.correlation import _tau_b
-    from raise_featurestore_spark.analytics.kendall_full import kendall_tau_full
+    from raise_featurestore_spark.analytics.kendall_full import kendall_tau_matrix
     from raise_featurestore_spark.session import get_spark
 
     spark = get_spark("stress-kendall")
@@ -39,22 +40,20 @@ def main(n: int = 1_000_000) -> None:
     sdf.count()
     for nb, p in [(64, None), (16, 8)]:
         t0 = time.perf_counter()
-        got = kendall_tau_full(
-            sdf, "x", "y", round_to=None, n_buckets=nb, num_partitions=p
+        got = kendall_tau_matrix(
+            sdf, ["x", "y"], round_to=None, n_buckets=nb, num_partitions=p
         ).collect()[0]
         dt = time.perf_counter() - t0
         status = "MATCH" if got.corr == want else "MISMATCH"
         print(
-            f"kendall_full(buckets={nb}, parts={p}): {status} "
+            f"kendall_matrix(2 features, buckets={nb}, parts={p}): {status} "
             f"tau={got.corr!r} (knight {want!r}) n={got.n} spark={dt:.1f}s "
             f"knight={t_knight:.1f}s"
         )
         assert got.corr == want, (got.corr, want)
 
-    # the MATRIX path at the same scale: 3 features, every pair bit-equal
-    # to the Knight kernel, all from ONE data-scale range exchange
-    from raise_featurestore_spark.analytics.kendall_full import kendall_tau_matrix
-
+    # 3 features at the same scale: every pair bit-equal to the Knight
+    # kernel, all from ONE data-scale range exchange
     z = np.round(0.3 * y + rng.normal(size=n) * 10, 0)
     sdf3 = spark.createDataFrame(
         [(float(a), float(b), float(c)) for a, b, c in zip(x, y, z)],
@@ -74,7 +73,7 @@ def main(n: int = 1_000_000) -> None:
     print(f"kendall_matrix(3 features, {len(got_m)} pairs): MATCH spark={dt:.1f}s")
 
     # the PRD-shaped WIDE matrix at the same scale: k=10 features
-    # (45 pairs), proving the r8 dense-pid driver cost stays linear in
+    # (45 pairs), proving the dense-pid driver cost stays linear in
     # pairs and measuring the raise_/PRD.md:2754 "<10 s for a 10-feature
     # matrix" target at 1M rows. Every pair bit-equal to Knight.
     k = 10

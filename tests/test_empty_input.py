@@ -84,3 +84,27 @@ def test_every_query_survives_empty_tables(spark, empty_sf_dir, names):
             if not isinstance(ex, EXPECTED_GUARDS.get(name, ())):
                 failures.append(f"{name}: {type(ex).__name__}: {str(ex).splitlines()[0][:140]}")
     assert not failures, "\n".join(failures)
+
+
+@pytest.mark.parametrize(
+    "name", ["corr_kendall_sampled", "corr_kendall_full", "corr_kendall_matrix"]
+)
+def test_kendall_matches_oracle_on_empty_tables(spark, empty_sf_dir, name):
+    """On empty input each kendall query returns its oracle's rows: every
+    pair with n = 0 and a NULL corr (plus the diagonal for the
+    Correlation-spec query), not an empty frame."""
+    import duckdb
+
+    import __spark_entry__ as em
+    from tests.conftest import assert_frames_match
+
+    con = duckdb.connect()
+    for path in glob.glob(os.path.join(empty_sf_dir, "*.parquet")):
+        table = os.path.basename(path)[: -len(".parquet")]
+        con.execute(
+            f"CREATE VIEW {table} AS SELECT * FROM read_parquet('{path}/*.parquet')"
+        )
+    want = con.sql(em.oracle_sql()[name]).df()
+    assert len(want) > 0
+    with cache_scope():
+        assert_frames_match(em.queries()[name](spark, empty_sf_dir), want)

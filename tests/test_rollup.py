@@ -199,10 +199,9 @@ def test_streaming_rollup_replay_is_idempotent(spark, events, tmp_path):
 
 
 def test_rollup_underflow_poisons_across_merged_batches(spark):
-    """The r7 underflow sentinel holds through incremental merging: two
+    """The underflow sentinel holds through incremental merging: two
     batches of sub-grid values fold into bucket totals whose majority test
-    fires at finalize (NaN, never a silent 0.0), and the pre-r7 stored
-    schema (no uf column) merges conservatively."""
+    fires at finalize (NaN, never a silent 0.0)."""
     import math
 
     from raise_featurestore_spark.streaming.rollup import (
@@ -229,12 +228,6 @@ def test_rollup_underflow_poisons_across_merged_batches(spark):
     ok = merge_rollups(batch([1.5] * 10), batch([2.5] * 10))
     fin = finalize_rollup(ok, ["sum"]).collect()
     assert all(not math.isnan(r.sum_value) for r in fin)
-
-    # legacy partials without the uf column merge as uf=0 (no poison)
-    legacy = batch([3.0] * 6).drop("uf")
-    merged = merge_rollups(legacy, batch([4.0] * 6))
-    fin2 = finalize_rollup(merged, ["sum"]).collect()
-    assert all(not math.isnan(r.sum_value) for r in fin2)
 
 
 def test_percentile_rollup_merge_invariance(spark):
@@ -332,17 +325,14 @@ def test_percentile_rollup_streaming_batches(spark, tmp_path):
 
 
 def test_merge_refuses_pre_r8_value_scale_partials(spark, events):
-    """r8 ADVICE high: union coercion silently widens decimal(28,0) vs
-    decimal(28,4) instead of erroring, so merging pre-r8 dec_term
-    partials would corrupt sums with no poison. merge_rollups must
-    raise on value-scale inputs, and migrate_rollup_partials must
-    rescale them into the current format exactly."""
+    """Union coercion silently widens decimal(28,0) vs decimal(28,4)
+    instead of erroring, so merging value-scale (decimal scale 4/8)
+    partials would corrupt sums with no poison. merge_rollups must raise
+    on them, whichever side they arrive on."""
     from pyspark.sql import functions as F
 
     from raise_featurestore_spark.streaming.rollup import (
-        finalize_rollup,
         merge_rollups,
-        migrate_rollup_partials,
         rollup_partials,
     )
 
@@ -359,18 +349,6 @@ def test_merge_refuses_pre_r8_value_scale_partials(spark, events):
         merge_rollups(new, old_fmt)
     with pytest.raises(ValueError, match="pre-r8 dec_term"):
         merge_rollups(old_fmt, new)
-
-    migrated = migrate_rollup_partials(old_fmt)
-    got = _finalized_rows(
-        finalize_rollup(merge_rollups(new, migrated), ["count", "sum", "avg"])
-    )
-    want = _finalized_rows(
-        finalize_rollup(rollup_partials(events, "value"), ["count", "sum", "avg"])
-    )
-    assert got == want and len(got) > 0
-
-    with pytest.raises(ValueError, match="expects the pre-r8"):
-        migrate_rollup_partials(new)  # already current format
 
 
 def test_streaming_rollup_format_marker(spark, events, tmp_path):

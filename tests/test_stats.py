@@ -273,14 +273,18 @@ def test_kendall_sample_estimates_population_tau(spark):
 
 
 @pytest.mark.slow
-def test_kendall_full_matches_knight_kernel(spark):
-    """Distributed exact tau-b (3-term inversion decomposition) must equal
-    the O(n log n) Knight kernel BIT-EXACTLY — heavy x/y ties, multiple
-    partition/bucket shapes, and the degenerate edges."""
+def test_kendall_two_feature_matrix_matches_knight_kernel(spark):
+    """Exact tau-b of one pair (the two-feature matrix) must equal the
+    O(n log n) Knight kernel BIT-EXACTLY — heavy x/y ties, multiple
+    partition/bucket shapes through both the distributed decomposition
+    (small_n=0) and the single-task kernel, and the degenerate edges."""
     import numpy as np
 
     from raise_featurestore_spark.analytics.correlation import _tau_b
-    from raise_featurestore_spark.analytics.kendall_full import kendall_tau_full
+    from raise_featurestore_spark.analytics.kendall_full import kendall_tau_matrix
+
+    def tau(sdf, **kw):
+        return kendall_tau_matrix(sdf, ["x", "y"], **kw).collect()[0]
 
     rng = np.random.default_rng(11)
     n = 20_000
@@ -291,29 +295,29 @@ def test_kendall_full_matches_knight_kernel(spark):
     )
     want = _tau_b(x, y)
     for nb, p in [(4, 3), (64, 32)]:
-        got = kendall_tau_full(
-            sdf, "x", "y", round_to=None, n_buckets=nb, num_partitions=p
-        ).collect()[0]
-        assert got.corr == want, (nb, p, got.corr, want)
-        assert got.n == n
+        for small in ({"small_n": 0}, {}):
+            got = tau(sdf, round_to=None, n_buckets=nb, num_partitions=p, **small)
+            assert got.corr == want, (nb, p, small, got.corr, want)
+            assert got.n == n
 
     # degenerate edges: single row, all-x-tied (NULL tau), anticorrelated
-    one = kendall_tau_full(
-        spark.createDataFrame([(1.0, 2.0)], "x double, y double"), "x", "y"
-    ).collect()[0]
-    assert one.n == 1 and one.corr is None
-    tied = kendall_tau_full(
-        spark.createDataFrame([(1.0, 1.0), (1.0, 2.0)], "x double, y double"),
-        "x", "y",
-    ).collect()[0]
-    assert tied.corr is None  # zero x-spread: denominator 0
-    anti = kendall_tau_full(
-        spark.createDataFrame(
-            [(1.0, 4.0), (2.0, 3.0), (3.0, 2.0), (4.0, 1.0)], "x double, y double"
-        ),
-        "x", "y", round_to=None,
-    ).collect()[0]
-    assert anti.corr == -1.0 and anti.concordant_minus_discordant == -6
+    for small in ({"small_n": 0}, {}):
+        one = tau(spark.createDataFrame([(1.0, 2.0)], "x double, y double"), **small)
+        assert one.n == 1 and one.corr is None
+        tied = tau(
+            spark.createDataFrame([(1.0, 1.0), (1.0, 2.0)], "x double, y double"),
+            **small,
+        )
+        assert tied.corr is None  # zero x-spread: denominator 0
+        anti = tau(
+            spark.createDataFrame(
+                [(1.0, 4.0), (2.0, 3.0), (3.0, 2.0), (4.0, 1.0)],
+                "x double, y double",
+            ),
+            round_to=None,
+            **small,
+        )
+        assert anti.corr == -1.0 and anti.concordant_minus_discordant == -6
 
 
 def test_local_inv_vectorized_matches_fenwick():
