@@ -204,7 +204,7 @@ class Correlation(_Spec):
     # bounded-sample estimate; spearman: the row-level average-rank
     # kernel (one range shuffle + one pivot shuffle) instead of the
     # default grid-snapped matrix whose rank maps are grid-bounded and
-    # broadcast (correlation.spearman_matrix_approx — near-ties within
+    # collected once (correlation._grid_corr_matrix — near-ties within
     # half a sig-grid step become exact ties, everything else identical).
     # Pearson is always exact.
     exact: bool = False

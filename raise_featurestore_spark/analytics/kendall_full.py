@@ -429,9 +429,22 @@ def kendall_tau_matrix(
             higher = np.concatenate([suffix[1:], [0]])
             d_diff += sum(int(a) * int(h) for a, h in zip(Mp[q], higher))
         d_by[pi] = d_local[pi] + d_diff + d_same.get(pi, 0)
-    return spark.createDataFrame(
+    return literal_rows(
+        spark,
         _assemble_tau_rows(pairs, features, tie, n, n0, d_by, n3_by, round_to),
         _SCHEMA,
+    )
+
+
+def literal_rows(spark, rows: list[tuple], schema: str) -> DataFrame:
+    """A small driver-built table as a ONE-partition literal relation
+    (``range(1)`` + ``inline``) with the DDL ``schema``. A
+    ``createDataFrame`` list scans a defaultParallelism-partition RDD
+    instead: the two-feature matrix's distributed result took a median
+    0.25 s per action that way at sf0.1 on 4 cores, 0.03 s as a literal."""
+    structs = [F.struct(*[F.lit(v) for v in row]) for row in rows]
+    return spark.range(1, numPartitions=1).select(
+        F.inline(F.array(*structs).cast(f"array<struct<{schema}>>"))
     )
 
 

@@ -33,10 +33,67 @@ partition would make the local window's frame order nondeterministic.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from raise_featurestore_spark.functions.conf_scope import scoped_checkpoint
+
+
+def _range_scan(
+    df: DataFrame,
+    group_cols: list[str],
+    order_col: str,
+    local,
+    totals: dict[str, Column],
+    num_partitions: int | None,
+) -> DataFrame:
+    """Steps 1-3 of the module docstring. Returns ``df`` with ``__pid``,
+    the window columns ``local(w)`` builds from ``w`` (partitioned by
+    group and range partition, ordered by ``order_col``), and one
+    ``__off_{name}`` per ``totals`` aggregate: its value over all EARLIER
+    range partitions of the row's group (0 for the first)."""
+    if num_partitions is None:
+        num_partitions = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    range_cols = [F.col(c) for c in group_cols] + [F.col(order_col)]
+    part = df.repartitionByRange(num_partitions, *range_cols).withColumn(
+        "__pid", F.spark_partition_id()
+    )
+    # CORRECTNESS: the local-window branch and the totals branch below both
+    # read this frame. Without pinning it, the optimizer may plant TWO
+    # independent range exchanges — and RangePartitioner's sampled bounds
+    # are seeded per RDD instance, so the two branches can disagree on
+    # which partition a key lands in. The offset join then stitches
+    # partition i's local sums to partition i's total under a DIFFERENT
+    # boundary — silently wrong running totals (observed: ~25k of 26k
+    # cums wrong on a 50k-row corpus; invisible at small scale where the
+    # bound sample is exhaustive). The checkpoint pins ONE physical RDD
+    # instance both branches read. Trade: a lost executor cannot
+    # recompute truncated lineage and fails the job (same posture as
+    # components.py's iterative checkpoints); storage is one transient
+    # MEMORY_AND_DISK copy on top of the shuffle.
+    part = scoped_checkpoint(part, eager=False)
+    keys = [*group_cols, "__pid"]
+    tot = part.groupBy(*keys).agg(*[agg.alias(f"__tot_{n}") for n, agg in totals.items()])
+    lower = tot.select(
+        *[F.col(c).alias(f"__b_{c}") for c in group_cols],
+        F.col("__pid").alias("__bpid"),
+        *[F.col(f"__tot_{n}").alias(f"__btot_{n}") for n in totals],
+    )
+    cond = F.col("__bpid") < F.col("__pid")
+    for c in group_cols:
+        cond = cond & (F.col(f"__b_{c}") == F.col(c))
+    offsets = (
+        tot.join(F.broadcast(lower), cond, "left")
+        .groupBy(*keys)
+        .agg(
+            *[
+                F.coalesce(F.sum(f"__btot_{n}"), F.lit(0)).alias(f"__off_{n}")
+                for n in totals
+            ]
+        )
+    )
+    w = Window.partitionBy(*keys).orderBy(order_col)
+    return part.select("*", *local(w)).join(F.broadcast(offsets), keys)
 
 
 def grouped_range_prefix_sums(
@@ -53,59 +110,22 @@ def grouped_range_prefix_sums(
     but a hot group never collapses onto a single task: the range shuffle
     spreads (group, order) jointly, so one group's values span many
     partitions and the offset join stitches them back."""
-    if num_partitions is None:
-        num_partitions = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    range_cols = [F.col(c) for c in group_cols] + [F.col(order_col)]
-    part = df.repartitionByRange(num_partitions, *range_cols).withColumn(
-        "__pid", F.spark_partition_id()
+    rows = (Window.unboundedPreceding, Window.currentRow)
+    scanned = _range_scan(
+        df,
+        group_cols,
+        order_col,
+        lambda w: [
+            F.sum(src).over(w.rowsBetween(*rows)).alias(f"__loc_{out}")
+            for out, src in sums.items()
+        ],
+        {out: F.sum(src) for out, src in sums.items()},
+        num_partitions,
     )
-    # CORRECTNESS: the local-sums branch and the totals branch below both
-    # read this frame. Without pinning it, the optimizer may plant TWO
-    # independent range exchanges — and RangePartitioner's sampled bounds
-    # are seeded per RDD instance, so the two branches can disagree on
-    # which partition a key lands in. The offset join then stitches
-    # partition i's local sums to partition i's total under a DIFFERENT
-    # boundary — silently wrong running totals (observed: ~25k of 26k
-    # cums wrong on a 50k-row corpus; invisible at small scale where the
-    # bound sample is exhaustive). The checkpoint pins ONE physical RDD
-    # instance both branches read. Trade: a lost executor cannot
-    # recompute truncated lineage and fails the job (same posture as
-    # components.py's iterative checkpoints); storage is one transient
-    # MEMORY_AND_DISK copy on top of the shuffle.
-    part = scoped_checkpoint(part, eager=False)
-    w_local = (
-        Window.partitionBy(*group_cols, "__pid")
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return scanned.select(
+        *df.columns,
+        *[(F.col(f"__loc_{out}") + F.col(f"__off_{out}")).alias(out) for out in sums],
     )
-    local = part.select(
-        "*", *[F.sum(src).over(w_local).alias(f"__loc_{out}") for out, src in sums.items()]
-    )
-    totals = part.groupBy(*group_cols, "__pid").agg(
-        *[F.sum(src).alias(f"__tot_{out}") for out, src in sums.items()]
-    )
-    lower = totals.select(
-        *[F.col(c).alias(f"__b_{c}") for c in group_cols],
-        F.col("__pid").alias("__bpid"),
-        *[F.col(f"__tot_{out}").alias(f"__btot_{out}") for out in sums],
-    )
-    cond = F.col("__bpid") < F.col("__pid")
-    for c in group_cols:
-        cond = cond & (F.col(f"__b_{c}") == F.col(c))
-    offsets = (
-        totals.join(F.broadcast(lower), cond, "left")
-        .groupBy(*group_cols, "__pid")
-        .agg(
-            *[
-                F.coalesce(F.sum(f"__btot_{out}"), F.lit(0)).alias(f"__off_{out}")
-                for out in sums
-            ]
-        )
-    )
-    out_cols = [c for c in df.columns] + [
-        (F.col(f"__loc_{out}") + F.col(f"__off_{out}")).alias(out) for out in sums
-    ]
-    return local.join(F.broadcast(offsets), [*group_cols, "__pid"]).select(*out_cols)
 
 
 def grouped_range_avg_ranks(
@@ -129,48 +149,25 @@ def grouped_range_avg_ranks(
     C + offset − (t−1)/2, identical to the distinct-value construction.
     Rows need NOT be unique in (group, order), unlike
     :func:`grouped_range_prefix_sums`."""
-    if num_partitions is None:
-        num_partitions = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    range_cols = [F.col(c) for c in group_cols] + [F.col(order_col)]
-    part = df.repartitionByRange(num_partitions, *range_cols).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    # same two-branch boundary pin as grouped_range_prefix_sums (see the
-    # CORRECTNESS comment there): local windows and totals must observe
-    # ONE physical range partitioning
-    part = scoped_checkpoint(part, eager=False)
-    w_cum = (
-        Window.partitionBy(*group_cols, "__pid")
-        .orderBy(order_col)
-        .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    one = F.count(F.lit(1))
     w_tie = Window.partitionBy(*group_cols, "__pid", order_col)
-    local = part.select(
-        "*",
-        F.count(F.lit(1)).over(w_cum).alias("__loc_cum"),
-        F.count(F.lit(1)).over(w_tie).alias("__t"),
-    )
-    totals = part.groupBy(*group_cols, "__pid").agg(F.count(F.lit(1)).alias("__tot"))
-    lower = totals.select(
-        *[F.col(c).alias(f"__b_{c}") for c in group_cols],
-        F.col("__pid").alias("__bpid"),
-        F.col("__tot").alias("__btot"),
-    )
-    cond = F.col("__bpid") < F.col("__pid")
-    for c in group_cols:
-        cond = cond & (F.col(f"__b_{c}") == F.col(c))
-    offsets = (
-        totals.join(F.broadcast(lower), cond, "left")
-        .groupBy(*group_cols, "__pid")
-        .agg(F.coalesce(F.sum("__btot"), F.lit(0)).alias("__off"))
+    scanned = _range_scan(
+        df,
+        group_cols,
+        order_col,
+        lambda w: [
+            one.over(w.rangeBetween(Window.unboundedPreceding, Window.currentRow))
+            .alias("__loc_cum"),
+            one.over(w_tie).alias("__t"),
+        ],
+        {"cum": one},
+        num_partitions,
     )
     rank = (
-        (F.col("__loc_cum") + F.col("__off")).cast("double")
+        (F.col("__loc_cum") + F.col("__off_cum")).cast("double")
         - (F.col("__t") - F.lit(1)) / F.lit(2.0)
     ).alias(out_col)
-    return local.join(F.broadcast(offsets), [*group_cols, "__pid"]).select(
-        *df.columns, rank
-    )
+    return scanned.select(*df.columns, rank)
 
 
 def range_prefix_sums(
@@ -183,17 +180,3 @@ def range_prefix_sums(
     equivalent to ``F.sum(src).over(Window.orderBy(order_col))`` per entry,
     without the single-partition bottleneck."""
     return grouped_range_prefix_sums(df, [], order_col, sums, num_partitions)
-
-
-def ranked_by_value(
-    df: DataFrame, value_col: str, num_partitions: int | None = None
-) -> DataFrame:
-    """Distinct values of ``value_col`` with tie counts ``t`` and the
-    average rank each value would get in the full frame (standard
-    average-of-tied-ranks: ``cum_count - (t - 1)/2``). One groupBy + one
-    distributed prefix sum — no global-sort window."""
-    byval = df.groupBy(value_col).agg(F.count(F.lit(1)).alias("t"))
-    cum = range_prefix_sums(byval, value_col, {"__cum": "t"}, num_partitions)
-    return cum.withColumn("avg_rank", F.col("__cum") - (F.col("t") - F.lit(1)) / F.lit(2.0)).drop(
-        "__cum"
-    )

@@ -33,7 +33,6 @@ from raise_featurestore_spark.analytics.analysis import (
 from raise_featurestore_spark.analytics.correlation import (
     compile_correlation,
     correlation_to_sql,
-    kendall_to_sql,
 )
 from raise_featurestore_spark.analytics.distribution import (
     compile_distribution,
@@ -303,7 +302,7 @@ register(
     # n=2000, cross-checking the single-task O(n log n) kernel.
     "corr_kendall_sampled",
     lambda spark, sf_dir: compile_correlation(load_table(spark, sf_dir, "events"), _CORR_K),
-    kendall_to_sql(_CORR_K, "events"),
+    correlation_to_sql(_CORR_K, "events"),
 )
 
 _CORR_X = Correlation(features=["o_totalprice", "cust_balance"])
@@ -1325,7 +1324,7 @@ register(
 )
 
 # --------------------------------------------------------------------------
-# PRD-shaped WIDE correlation matrix (r8 VERDICT item 2): the reference's
+# PRD-shaped WIDE correlation matrix: the reference's
 # own latency target is a 10-FEATURE matrix < 10 s (raise_/PRD.md:2754;
 # N×N contract raise_/analytics/analysis.py:152-195). Ten features over
 # lineitem: the 8 natural numeric columns plus the two TPC-H Q1 derived
@@ -1359,22 +1358,21 @@ def _wide_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _WIDE_P = Correlation(features=_WIDE_FEATS)
-# default exact=False → the grid-snapped spearman leg (VERDICT r9 item 4:
-# the exact melt→rank→pivot leg cost ~80 s CPU over 4 stage barriers and
-# put the matrix outside the PRD < 10 s target; the grid path is the
-# registered 100 TB posture and corr_spearman / corr_spearman_wide_grid
-# keep the exact and grid kernels independently gated). exact=True on the
-# spec restores the row-rank leg.
+# default exact=False → the grid-snapped spearman half: the exact
+# melt→rank→pivot leg costs ~80 s CPU over 4 stage barriers and puts the
+# matrix outside the PRD < 10 s target. corr_spearman keeps the exact
+# kernel gated on its own, and corr_spearman_wide_grid the grid kernel's
+# spearman-only route.
 _WIDE_S = Correlation(features=_WIDE_FEATS, method="spearman")
 
 
 def _corr_matrix_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     """10-feature pearson AND spearman matrices at DATA scale, one long
-    frame with a method column — the FUSED plan (r10 VERDICT item 2):
-    one persisted 10-column projection feeds the rank-map build, the
-    pearson guard, and a SINGLE 90-cell corr aggregate; values are
-    bit-identical to the two-leg compile_correlation union (same F.corr
-    over the same guarded doubles / searchsorted grid ranks)."""
+    frame with a method column: the grid kernel with its pearson half
+    (correlation_matrix_dual) — one persisted projection feeds the
+    rank-map build, the pearson guard and ONE 90-cell raw-moment
+    aggregate. After the round-4 snap the rows equal the two-leg
+    compile_correlation union the oracle mirrors."""
     from raise_featurestore_spark.analytics.correlation import (
         correlation_matrix_dual,
     )
@@ -1405,21 +1403,15 @@ register(
     kendall_tau_matrix_sql(_WIDE_TBL, _WIDE_FEATS, where=_KW_WHERE),
 )
 
-# The 100 TB spearman: snapped to the sig grid, rank maps GRID-bounded
-# (broadcastable) → rank attachment is a map-side lookup, zero row-scale
-# shuffles at any corpus size. Deterministic (not banded): the oracle
-# computes the same snapped definition, so the gate hash-matches values.
-from raise_featurestore_spark.analytics.correlation import (
-    spearman_matrix_approx,
-    spearman_matrix_approx_sql,
-)
-
+# The 100 TB spearman, the Correlation default: snapped to the sig grid,
+# rank maps GRID-bounded (collected once) → rank attachment is a map-side
+# lookup, zero row-scale shuffles at any corpus size. Deterministic (not
+# banded): the oracle computes the same snapped definition, so the gate
+# hash-matches values.
 register(
     "corr_spearman_wide_grid",
-    lambda spark, sf_dir: spearman_matrix_approx(
-        _wide_lineitem(spark, sf_dir), _WIDE_FEATS
-    ),
-    spearman_matrix_approx_sql(_WIDE_TBL, _WIDE_FEATS),
+    lambda spark, sf_dir: compile_correlation(_wide_lineitem(spark, sf_dir), _WIDE_S),
+    correlation_to_sql(_WIDE_S, _WIDE_TBL),
 )
 
 register(

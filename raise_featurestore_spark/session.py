@@ -10,6 +10,8 @@ what we would set on a real multi-executor cluster:
   wall-clock values across engines (the DuckDB oracle reads them naively).
 - ``spark.sql.shuffle.partitions`` sized to the core count locally; on a
   cluster AQE coalescing makes the initial number less critical.
+- ``spark.driver.memory`` from ``$SPARK_GRAFT_DRIVER_MEM``, else
+  :func:`_default_driver_memory`.
 """
 
 from __future__ import annotations
@@ -17,6 +19,18 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _default_driver_memory() -> str:
+    """``min(16g, physical memory / 2)``. In local mode the driver JVM runs
+    every task. With a maximum heap above the box's RAM (16g on a 15 GB
+    box with no swap) the JVM may grow its heap instead of collecting
+    until the OS kills it and the session is lost; with a heap inside RAM
+    the collector runs in time and an oversized job fails with an
+    OutOfMemoryError the caller sees. Half the RAM leaves the rest to the
+    Python workers and the page cache."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(16 * 1024, phys_mb // 2)}m"
 
 
 def get_spark(app_name: str = "raise-featurestore-spark", cpus: int | None = None) -> SparkSession:
@@ -38,7 +52,10 @@ def get_spark(app_name: str = "raise-featurestore-spark", cpus: int | None = Non
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         # testdata events.ts is TIMESTAMP(NANOS): Spark has no ns timestamp,
         # so read as long and convert (see tables.load_table)

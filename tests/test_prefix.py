@@ -7,7 +7,7 @@ import random
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from raise_featurestore_spark.functions.prefix import range_prefix_sums, ranked_by_value
+from raise_featurestore_spark.functions.prefix import range_prefix_sums
 
 
 def test_range_prefix_sums_matches_global_window(spark):
@@ -33,13 +33,6 @@ def test_range_prefix_sums_more_partitions_than_rows(spark):
         (r["x"], r["c"]) for r in range_prefix_sums(df, "x", {"c": "a"}, num_partitions=16).collect()
     )
     assert got == [(1.0, 2), (2.0, 5)]
-
-
-def test_ranked_by_value_average_ranks(spark):
-    # values: 3,1,1,2,2,2 -> ranks 1..6; avg ranks: 1->1.5, 2->4.0, 3->6.0
-    df = spark.createDataFrame([(3,), (1,), (1,), (2,), (2,), (2,)], "v long")
-    got = {r["v"]: (r["t"], r["avg_rank"]) for r in ranked_by_value(df, "v", 4).collect()}
-    assert got == {1: (2, 1.5), 2: (3, 4.0), 3: (1, 6.0)}
 
 
 def test_prefix_sums_consistent_at_partial_sample_scale(spark):

@@ -453,7 +453,7 @@ def test_correlation_spec_exact_kendall(spark):
     from raise_featurestore_spark.analytics.correlation import (
         _tau_b,
         compile_correlation,
-        kendall_exact_to_sql,
+        correlation_to_sql,
     )
 
     rng = np.random.default_rng(21)
@@ -478,7 +478,7 @@ def test_correlation_spec_exact_kendall(spark):
     con.executemany("INSERT INTO t VALUES (?, ?, ?)", rows)
     want = {
         (r[0], r[1]): r[2]
-        for r in con.sql(kendall_exact_to_sql(spec, "t", round_to=4)).fetchall()
+        for r in con.sql(correlation_to_sql(spec, "t", round_to=4)).fetchall()
     }
     got4 = {
         (r.feature_a, r.feature_b): r.corr
@@ -745,6 +745,39 @@ def test_embedding_rff_mmd_detects_variance_only_shift(spark):
     df0 = spark.createDataFrame(same, "vec_id long, embedding array<float>")
     z = embedding_rff_mmd_drift(df0, **args, round_to=None).collect()[0].mmd_sq
     assert not math.isnan(z) and z == 0.0, z
+
+
+@pytest.mark.parametrize("case", ["constant", "all_null", "empty"])
+def test_dual_matrix_equals_per_method_matrices(spark, case):
+    """correlation_matrix_dual's pearson and spearman rows equal
+    compile_correlation's pearson and spearman-default matrices after
+    the round-4 snap, on a frame with a constant feature, one with an
+    all-NULL feature and an empty one."""
+    from raise_featurestore_spark.analytics.analysis import Correlation
+    from raise_featurestore_spark.analytics.correlation import (
+        compile_correlation,
+        correlation_matrix_dual,
+    )
+
+    rows = [
+        (float(i), float((i * 37) % 101) / 7.0, 3.0 if case == "constant" else None)
+        for i in range(200 if case != "empty" else 0)
+    ]
+    df = spark.createDataFrame(rows, "a double, b double, c double")
+    feats = ["a", "b", "c"]
+    dual = {}
+    for r in correlation_matrix_dual(df, feats).collect():
+        dual.setdefault(r.method, {})[(r.feature_a, r.feature_b)] = r.corr
+    for method in ("pearson", "spearman"):
+        want = {
+            (r.feature_a, r.feature_b): r.corr
+            for r in compile_correlation(df, Correlation(features=feats, method=method)).collect()
+        }
+        assert dual[method] == want, method
+    if case == "constant":
+        assert dual["pearson"][("a", "b")] is not None
+        assert dual["pearson"][("a", "c")] is None
+        assert dual["spearman"][("b", "c")] is None
 
 
 def test_spearman_grid_equals_exact_on_grid_aligned_data(spark):
